@@ -39,7 +39,7 @@ def main(argv: list[str] | None = None) -> int:
         metavar="PREV_RUN_ID",
         help="incremental update: re-extract only pages that changed vs "
         "this previous run's committed snapshot (same --out dir) and "
-        "re-canonicalize only affected components",
+        "canonicalize the updated linked table",
     )
     args = ap.parse_args(argv)
 

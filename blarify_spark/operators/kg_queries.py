@@ -93,7 +93,6 @@ def _kg_incr(spark: SparkSession) -> dict[str, DataFrame]:
             triples_from,
         )
         from blarify_spark.plans.linking import link_mentions, link_triples
-        from blarify_spark.plans.recanon import changed_url_set
         from blarify_spark.sources.alias import alias_dict
         from blarify_spark.sources.pages import pages_from_rows
 
@@ -115,7 +114,6 @@ def _kg_incr(spark: SparkSession) -> dict[str, DataFrame]:
             "edges": edges2.cache(),
             "mapping": mapping2,
             "changes": changes.cache(),
-            "changed_urls": changed_url_set(changes).cache(),
             "base": base,
         }
     return _CACHE2[key]
@@ -628,25 +626,17 @@ def kg_diff_labeled_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("kg_recanon_affected", oracle=None)
 def kg_recanon_affected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Affected-component re-canonicalization (round-3): patch the
-    entity mapping for ONLY the components touched by changed pages
+    """Entities whose canonical label the incremental snapshot changed
     (blarify's reverse-dependency closure,
-    project_graph_diff_creator.py:221-271) and return the re-labeled
-    rows. Equality with a full rebuild is pinned by tests/test_recanon.py."""
-    from blarify_spark.plans.recanon import recanonicalize_affected
-
+    project_graph_diff_creator.py:221-271): the diff of the base mapping
+    against the new snapshot's mapping. incremental_update reproduces
+    that mapping exactly (tests/test_recanon.py)."""
     incr = _kg_incr(spark)
-    new_mapping = recanonicalize_affected(
-        incr["base"]["triples"],
-        incr["triples"],
-        incr["changed_urls"],
-        incr["base"]["mapping"],
-    )
     old = incr["base"]["mapping"].select(
         "node_id", F.col("canon_id").alias("old_canon")
     )
     return (
-        new_mapping.join(old, "node_id", "left")
+        incr["mapping"].join(old, "node_id", "left")
         .filter(
             F.col("old_canon").isNull()
             | (F.col("old_canon") != F.col("canon_id"))

@@ -129,29 +129,21 @@ def _minhash_signature(shingle_col) -> F.Column:  # noqa: ANN001
 def lsh_bands(nodes: DataFrame) -> DataFrame:
     """The LSH band table (node_id, shingles, band_key), bucket-capped.
 
-    This is the structure a 10^12-document deployment PERSISTS as the
-    similarity index: build once per snapshot, probe many times
-    (candidate_pairs self-join, incremental-update delta probes in
-    plans/recanon.py).
-
-    The raw band table is materialized here (eager lineage cut) for the
-    same reason production persists it: downstream the table fans out to
-    FIVE consumers (both sides of the bucket self-join, the bucket-size
-    histogram, and the two shingle re-joins), and without a
-    materialization barrier AQE launches each consumer's leaf stage
-    independently — the whole signature pipeline then executes once PER
-    CONSUMER (observed: ~12 concurrent duplicate 32-task stages at bench
-    scale). One job builds the index; every probe reads blocks."""
+    The raw band table is materialized here (eager lineage cut):
+    downstream it fans out to FIVE consumers (both sides of the bucket
+    self-join, the bucket-size histogram, and the two shingle re-joins),
+    and without a materialization barrier AQE launches each consumer's
+    leaf stage independently — the whole signature pipeline then
+    executes once PER CONSUMER (observed: ~12 concurrent duplicate
+    32-task stages at bench scale). One job builds the table; every
+    consumer reads blocks."""
     return cap_bands(lsh_bands_raw(nodes).transform(cut_lineage))
 
 
 def lsh_bands_raw(nodes: DataFrame) -> DataFrame:
-    """UNCAPPED band rows — the form to persist and patch incrementally:
-    a node's bands depend only on its own name, so a snapshot's raw band
-    table is (previous raw bands for surviving nodes) UNION (bands of new
-    nodes) — see plans/recanon.py:bands_patch. The MAX_BUCKET guard is
-    membership-dependent and therefore applied at probe time
-    (cap_bands), never baked into the persisted table.
+    """UNCAPPED band rows: a node's bands depend only on its own name,
+    while the MAX_BUCKET guard depends on the whole node set and is
+    applied afterwards (cap_bands).
 
     Signature computation is explode + codegen min-aggregates instead of
     H interpreted higher-order array passes: Catalyst lambdas
@@ -161,10 +153,10 @@ def lsh_bands_raw(nodes: DataFrame) -> DataFrame:
     measured ~2x on the document dedup path, operators/dedup.py). The
     min values are IDENTICAL to the _minhash_signature form — same
     xxhash64(i, shingle) family over the same distinct shingles — so band
-    keys, the persisted band-table contract, and every downstream pair
-    are unchanged. When `nodes` arrives hash-partitioned by node_id (it
-    is a groupBy(node_id) product in every caller), neither the signature
-    aggregation nor the shingle re-join inserts an Exchange.
+    keys and every downstream pair are unchanged. When `nodes` arrives
+    hash-partitioned by node_id (it is a groupBy(node_id) product in
+    every caller), neither the signature aggregation nor the shingle
+    re-join inserts an Exchange.
     """
     prepared = nodes.select(
         "node_id",
@@ -210,21 +202,9 @@ def lsh_bands_raw(nodes: DataFrame) -> DataFrame:
     return bands
 
 
-def band_bucket_sizes(bands_raw: DataFrame) -> DataFrame:
-    """(band_key, _bn) bucket histogram of a raw band table — the third
-    maintained incremental index (plans/recanon.py:bucket_sizes_patch):
-    persisting it makes cap_bands a key-pruned join instead of a
-    full-table aggregation on every probe."""
-    return bands_raw.groupBy("band_key").agg(F.count(F.lit(1)).alias("_bn"))
-
-
-def cap_bands(bands: DataFrame, sizes: DataFrame | None = None) -> DataFrame:
-    """Drop oversized (non-discriminative) buckets before any self-join.
-
-    sizes (optional): a pre-computed/maintained band_bucket_sizes table —
-    skips the full groupBy pass."""
-    if sizes is None:
-        sizes = band_bucket_sizes(bands)
+def cap_bands(bands: DataFrame) -> DataFrame:
+    """Drop oversized (non-discriminative) buckets before any self-join."""
+    sizes = bands.groupBy("band_key").agg(F.count(F.lit(1)).alias("_bn"))
     return bands.join(
         sizes.filter(F.col("_bn") <= MAX_BUCKET).select("band_key"),
         "band_key",
@@ -232,93 +212,44 @@ def cap_bands(bands: DataFrame, sizes: DataFrame | None = None) -> DataFrame:
     )
 
 
-def candidate_pairs(
-    nodes: DataFrame, probe_ids: DataFrame | None = None
-) -> DataFrame:
+def candidate_pairs(nodes: DataFrame) -> DataFrame:
     """LSH-blocked candidate pairs verified by exact Jaccard.
 
     Returns (src, dst) with src < dst, Jaccard >= threshold.
-
-    probe_ids (optional, one column `node_id`): restrict the LEFT side of
-    the bucket self-join to these nodes — the incremental-update probe
-    (plans/recanon.py): only pairs touching a probe node are returned, so
-    the join cost is O(|probe| x bucket) instead of O(n x bucket).
     """
-    return pairs_from_bands(lsh_bands(nodes), probe_ids)
+    return pairs_from_bands(lsh_bands(nodes))
 
 
-def pairs_from_bands(
-    bands: DataFrame, probe_ids: DataFrame | None = None
-) -> DataFrame:
-    """Verified pairs from a (possibly pre-materialized) band table —
-    callers that probe the same snapshot repeatedly build lsh_bands once
-    and reuse it here.
+def pairs_from_bands(bands: DataFrame) -> DataFrame:
+    """Verified pairs from a (capped) band table.
 
-    In full-snapshot mode the bucket self-join carries ONLY
-    (band_key, node_id) — the shingle arrays are re-attached per node
-    AFTER candidate dedup (the payload-slim shuffle rule, guide §2.3,
-    mirrored from operators/dedup.py's minhash path): the B-way band
-    explode would otherwise ship every node's shingle array B times
-    through the self-join exchange, and each surviving candidate pair
-    twice more through dropDuplicates. In PROBE mode the arrays keep
-    riding the join instead: the probe-filtered join touches O(|probe| x
-    bucket) rows, while a per-node shingle lookup would be a FULL-table
-    aggregation per probe — exactly the O(corpus)-per-delta cost
-    incremental recanonicalization exists to avoid (measured: +14 s on
-    kg_recanon_affected when the lookup was unconditional)."""
-    if probe_ids is None:
-        left = bands.select(F.col("band_key"), F.col("node_id").alias("src"))
-        right = bands.select(F.col("band_key"), F.col("node_id").alias("dst"))
-        pairs = (
-            left.join(right, "band_key")
-            .filter(F.col("src") < F.col("dst"))
-            .drop("band_key")
-            .dropDuplicates(["src", "dst"])
-        )
-        sh_map = bands.select("node_id", "shingles").dropDuplicates(
-            ["node_id"]
-        )
-        pairs = pairs.join(
-            sh_map.select(
-                F.col("node_id").alias("src"),
-                F.col("shingles").alias("src_sh"),
-            ),
-            "src",
-        ).join(
-            sh_map.select(
-                F.col("node_id").alias("dst"),
-                F.col("shingles").alias("dst_sh"),
-            ),
-            "dst",
-        )
-    else:
-        left = bands.join(
-            probe_ids.select("node_id").distinct(), "node_id", "left_semi"
-        ).select(
-            F.col("band_key"),
-            F.col("node_id").alias("src"),
-            F.col("shingles").alias("src_sh"),
-        )
-        right = bands.select(
-            F.col("band_key"),
-            F.col("node_id").alias("dst"),
-            F.col("shingles").alias("dst_sh"),
-        )
-        # probe side is only one end of each pair, so canonicalize the
-        # orientation AFTER the join instead of filtering src < dst
-        pairs = (
-            left.join(right, "band_key")
-            .filter(F.col("src") != F.col("dst"))
-            .drop("band_key")
-            .select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-                # jaccard is symmetric; keep shingles in join order
-                "src_sh",
-                "dst_sh",
-            )
-            .dropDuplicates(["src", "dst"])
-        )
+    The bucket self-join carries ONLY (band_key, node_id) — the shingle
+    arrays are re-attached per node AFTER candidate dedup (the
+    payload-slim shuffle rule, guide §2.3, mirrored from
+    operators/dedup.py's minhash path): the B-way band explode would
+    otherwise ship every node's shingle array B times through the
+    self-join exchange, and each surviving candidate pair twice more
+    through dropDuplicates."""
+    left = bands.select(F.col("band_key"), F.col("node_id").alias("src"))
+    right = bands.select(F.col("band_key"), F.col("node_id").alias("dst"))
+    pairs = (
+        left.join(right, "band_key")
+        .filter(F.col("src") < F.col("dst"))
+        .drop("band_key")
+        .dropDuplicates(["src", "dst"])
+    )
+    sh_map = bands.select("node_id", "shingles").dropDuplicates(["node_id"])
+    pairs = pairs.join(
+        sh_map.select(
+            F.col("node_id").alias("src"), F.col("shingles").alias("src_sh")
+        ),
+        "src",
+    ).join(
+        sh_map.select(
+            F.col("node_id").alias("dst"), F.col("shingles").alias("dst_sh")
+        ),
+        "dst",
+    )
     jaccard = F.size(F.array_intersect("src_sh", "dst_sh")) / F.size(
         F.array_union("src_sh", "dst_sh")
     )
@@ -475,11 +406,16 @@ def canonicalize(
     mapping: node_id -> canon_id
     """
     # raw_nodes feeds blocking AND the final node agg; mapping feeds the
-    # node agg AND both edge-endpoint remaps — persist both so each is
-    # computed once (they are tiny relative to the corpus).
-    raw_nodes = build_entity_nodes(linked_triples).persist()
+    # node agg AND both edge-endpoint remaps — cut both so each is
+    # computed once (they are tiny relative to the corpus). A lineage cut,
+    # not persist(): the cache manager matches cached plans by logical
+    # plan, so a persisted scan of a parquet path that was since re-landed
+    # (materialize_stage's staging + rename) would serve the old rows to
+    # the next canonicalize of that path — and each call would leak two
+    # cached DataFrames.
+    raw_nodes = build_entity_nodes(linked_triples).transform(cut_lazy)
     pairs = candidate_pairs(raw_nodes)
-    mapping = connected_components(raw_nodes, pairs).persist()
+    mapping = connected_components(raw_nodes, pairs).transform(cut_lazy)
 
     nodes = (
         raw_nodes.join(mapping, "node_id")

@@ -183,6 +183,41 @@ def materialize_stage(
 # ---------------------------------------------------------------------------
 
 
+def _memo(
+    compute: Callable[[], dict[str, DataFrame]],
+) -> Callable[[str], DataFrame]:
+    """Table getter over one lazily-run compute: stages that share a
+    plan (nodes/edges/mapping) run it once, and not at all when every
+    one of them resumes from its manifest."""
+    cache: dict[str, DataFrame] = {}
+
+    def get(which: str) -> DataFrame:
+        if not cache:
+            cache.update(compute())
+        return cache[which]
+
+    return get
+
+
+def _with_workflows(
+    nodes: DataFrame, edges: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """nodes/edges plus the workflow layer derived from them
+    (plans/workflows.py; blarify queries.py:1600-1675)."""
+    from blarify_spark.plans.workflows import (
+        materialize_workflows,
+        workflow_traces,
+    )
+
+    # cut lineage first: the traces loop joins the edge plan up to 20x,
+    # and the workflow rows re-enter the same tables they were derived from
+    nodes = nodes.transform(_cut)
+    edges = edges.select(*TRIPLE_COLS).transform(_cut)
+    return materialize_workflows(
+        nodes, edges, workflow_traces({"nodes": nodes, "edges": edges})
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -251,40 +286,22 @@ def run_pipeline(
 
     # canonicalize() yields nodes+edges+mapping together; compute once,
     # stage all three.
-    _canon_cache: dict[str, DataFrame] = {}
+    def _canonical() -> dict[str, DataFrame]:
+        nodes, edges, mapping = canonicalize(linked)
+        if with_workflows:
+            nodes, edges = _with_workflows(nodes, edges)
+        return {"nodes": nodes, "edges": edges, "mapping": mapping}
 
-    def _canon() -> dict[str, DataFrame]:
-        if not _canon_cache:
-            nodes, edges, mapping = canonicalize(linked)
-            if with_workflows:
-                from blarify_spark.plans.workflows import (
-                    materialize_workflows,
-                    workflow_traces,
-                )
-
-                # cut lineage first: the traces loop joins the edge plan
-                # up to 20x, and the workflow rows re-enter the same
-                # tables it was derived from
-                nodes = nodes.transform(_cut)
-                edges = edges.transform(_cut)
-                kg = {"nodes": nodes, "edges": edges}
-                nodes, edges = materialize_workflows(
-                    nodes, edges, workflow_traces(kg)
-                )
-            _canon_cache["nodes"] = nodes
-            _canon_cache["edges"] = edges
-            _canon_cache["mapping"] = mapping
-        return _canon_cache
-
+    canon = _memo(_canonical)
     nodes = materialize_stage(
-        spark, out_dir, run_id, "nodes", lambda: _canon()["nodes"], resume=resume
+        spark, out_dir, run_id, "nodes", lambda: canon("nodes"), resume=resume
     )
     edges = materialize_stage(
         spark,
         out_dir,
         run_id,
         "edges",
-        lambda: _canon()["edges"].select(*TRIPLE_COLS),
+        lambda: canon("edges").select(*TRIPLE_COLS),
         salt_on="subj_id",
         resume=resume,
     )
@@ -296,7 +313,7 @@ def run_pipeline(
         out_dir,
         run_id,
         "mapping",
-        lambda: _canon()["mapping"],
+        lambda: canon("mapping"),
         resume=resume,
     )
     from blarify_spark.plans.diff import _content_hash
@@ -331,7 +348,7 @@ def run_incremental(
 ) -> dict[str, DataFrame]:
     """Incremental successor to run_pipeline: update a previous run's
     materialized snapshot to `new_pages`, re-extracting only changed
-    pages and re-canonicalizing only affected components
+    pages and canonicalizing the updated linked table
     (plans/recanon.py). Writes the same stage set under the new run_id,
     so further updates chain off it.
     """
@@ -341,8 +358,6 @@ def run_incremental(
         PRED_BELONGS,
         PRED_STEP,
         WORKFLOW_URL_PREFIX,
-        materialize_workflows,
-        workflow_traces,
     )
     from blarify_spark.sources.alias import alias_dict
 
@@ -355,69 +370,45 @@ def run_incremental(
         return spark.read.parquet(os.path.join(out_dir, prev_run_id, stage))
 
     # A previous run_pipeline(with_workflows=True) persisted the workflow
-    # layer INTO nodes/edges. Those rows must NOT pass through the patch
-    # untouched (their urls are never in changed_urls, their ids never in
-    # the mapping — the layer would go silently stale vs a full rebuild,
-    # ADVICE r04): strip them before patching, re-derive from the patched
-    # graph after.
-    prev_nodes = _prev("nodes")
-    prev_edges = _prev("edges").select(*TRIPLE_COLS)
-    _is_wf_edge = F.col("url").startswith(WORKFLOW_URL_PREFIX) | F.col(
-        "pred"
-    ).isin(PRED_BELONGS, PRED_STEP)
+    # layer INTO nodes/edges; the update re-derives it from the new
+    # canonical tables so they stay equal to a full rebuild.
     had_workflows = (
-        prev_edges.filter(_is_wf_edge).limit(1).count() > 0
-    )  # one bounded probe job
-    if had_workflows:
-        wf_ids = (
-            prev_edges.filter(F.col("pred") == PRED_BELONGS)
-            .select(F.col("obj_id").alias("canon_id"))
-            .distinct()
+        _prev("edges")
+        .filter(
+            F.col("url").startswith(WORKFLOW_URL_PREFIX)
+            | F.col("pred").isin(PRED_BELONGS, PRED_STEP)
         )
-        prev_nodes = prev_nodes.join(wf_ids, "canon_id", "left_anti")
-        prev_edges = prev_edges.filter(~_is_wf_edge)
+        .limit(1)
+        .count()
+        > 0
+    )  # one bounded probe job
 
     out = incremental_update(
         _prev("digests"),  # url + content_hash is all classify needs
         new_pages,
         _prev("linked"),
-        prev_nodes,
-        prev_edges,
-        _prev("mapping"),
         alias_dict(spark),
     )
 
-    # re-materialize the workflow layer from the PATCHED graph so the
-    # incremental tables stay equivalent to a full rebuild
-    _wf_cache: dict[str, DataFrame] = {}
-
-    def _graph(which: str) -> DataFrame:
+    def _canonical() -> dict[str, DataFrame]:
         if not had_workflows:
-            return out[which] if which == "nodes" else out[which].select(
-                *TRIPLE_COLS
-            )
-        if not _wf_cache:
-            n = out["nodes"].transform(_cut)
-            e = out["edges"].select(*TRIPLE_COLS).transform(_cut)
-            wn, we = materialize_workflows(
-                n, e, workflow_traces({"nodes": n, "edges": e})
-            )
-            _wf_cache["nodes"] = wn
-            _wf_cache["edges"] = we
-        return _wf_cache[which]
+            return out
+        nodes, edges = _with_workflows(out["nodes"], out["edges"])
+        return {**out, "nodes": nodes, "edges": edges}
 
+    canon = _memo(_canonical)
     linked = materialize_stage(
         spark, out_dir, run_id, "linked", lambda: out["triples"], resume=resume
     )
     nodes = materialize_stage(
-        spark, out_dir, run_id, "nodes", lambda: _graph("nodes"), resume=resume
+        spark, out_dir, run_id, "nodes", lambda: canon("nodes"), resume=resume
     )
     edges = materialize_stage(
         spark,
         out_dir,
         run_id,
         "edges",
-        lambda: _graph("edges").select(*TRIPLE_COLS),
+        lambda: canon("edges").select(*TRIPLE_COLS),
         salt_on="subj_id",
         resume=resume,
     )

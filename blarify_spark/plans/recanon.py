@@ -1,52 +1,20 @@
-"""Incremental re-canonicalization + labeled graph diff (round-3).
+"""Incremental update + labeled graph diff.
 
-Blarify's incremental path recomputes changed files PLUS the files that
-reference them (reverse-dependency closure,
-reference: blarify/project_graph_diff_creator.py:221-271) and keeps
-deleted nodes labeled DELETED alongside ADDED/MODIFIED marks
-(project_graph_diff_creator.py:150-179). The web-KG analog:
+Blarify's incremental path rebuilds only changed files and keeps deleted
+nodes labeled DELETED alongside ADDED/MODIFIED marks
+(reference: blarify/prebuilt/graph_builder.py:178-235,
+project_graph_diff_creator.py:150-179). The web-KG analog:
 
-* a modified page can introduce an alias that MERGES two canonical
-  entity clusters, or remove the only bridge that held one together
-  (SPLIT) — so the canonicalization mapping of every component *touched
-  by* changed pages must be recomputed, but ONLY those components;
-* consumers need to see what changed: nodes/edges diffs carry
+* only changed pages are re-extracted and re-linked; every other page's
+  linked triples are reused from the previous snapshot;
+* canonicalization (MinHash-LSH blocking + connected components) then
+  runs in full over the new linked table. nodes/edges/mapping are a pure
+  function of `linked`, so the update equals a full rebuild of the new
+  snapshot for every delta (merges, splits, bucket-cap crossings) by
+  construction;
+* consumers see what changed: nodes/edges diffs carry
   ADDED | DELETED | MODIFIED | UNCHANGED labels, with DELETED rows kept
   as tombstones instead of silently dropped.
-
-Correctness argument for the scoped recompute (mapping equality with a
-full rebuild, pinned by tests/test_recanon.py):
-
-1. delta D = entities mentioned on changed urls (old or new snapshot).
-2. LSH probe: all candidate pairs of the NEW corpus touching D
-   (candidate_pairs(new_nodes, probe_ids=D) — the full band table is the
-   persisted LSH index at scale; only D's buckets are joined).
-2b. cap transitions: the MAX_BUCKET guard is corpus-membership-dependent
-   — an added/removed delta node can push a band bucket across the cap,
-   creating (bucket re-enabled) or destroying (bucket newly dropped)
-   verified pairs between two nodes NEITHER of which is in D. Only
-   buckets containing a delta node can change size, so the affected
-   bucket keys are exactly D's band keys (old ∪ new raw band tables);
-   every member of a key whose size crossed the cap joins the touched
-   set (cap_crossing_members).
-3. affected components A = old components of D, of D's pair partners,
-   and of the cap-crossing members.
-4. subgraph S = all current members of A, plus the touched set.
-   Every new-corpus similarity pair with an endpoint in S has BOTH
-   endpoints in S: a pre-existing pair means same old component; a new
-   pair either touches D (partner collected in step 2) or was created
-   by a cap transition (both endpoints collected in step 2b) — pair
-   existence depends only on the two nodes' names and their shared
-   bucket's cap status, all of which are otherwise unchanged. Hence no
-   edge crosses the S boundary and components split cleanly into
-   "inside S" (recomputed) and "outside S" (provably unchanged, old
-   labels kept).
-5. re-run LSH+CC on S only; patched mapping = keep ∪ sub.
-
-Nodes/edges tables are then PATCHED, not rebuilt: only canons whose
-membership or mention counts could have changed (those of S) are
-re-aggregated, and only edge rows on changed urls or with a re-labeled
-endpoint are re-mapped.
 """
 
 from __future__ import annotations
@@ -54,15 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from blarify_spark.functions.checkpoint import cut_lazy
-from blarify_spark.plans.canonicalize import (
-    band_bucket_sizes,
-    build_entity_nodes,
-    cap_bands,
-    connected_components,
-    lsh_bands,
-    lsh_bands_raw,
-    pairs_from_bands,
-)
 
 
 def changed_url_set(changes: DataFrame) -> DataFrame:
@@ -88,145 +47,11 @@ def _endpoint_ids(triples: DataFrame) -> DataFrame:
     )
 
 
-def _endpoints(triples: DataFrame) -> DataFrame:
-    return triples.select(
-        F.col("subj_id").alias("node_id"), F.col("subj_name").alias("name")
-    ).unionAll(
-        triples.select(
-            F.col("obj_id").alias("node_id"), F.col("obj_name").alias("name")
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Maintained incremental indexes: per-(node_id, name) mention stats and the
-# raw LSH band table — both patchable in O(delta), so the incremental path
-# never needs a full-corpus aggregation (the round-3 probe's remaining
-# fixed cost). Granularity note: stats are keyed by (node_id, name), not
-# node_id, because NIL entity names are NOT functionally dependent on the
-# id (case variants of a surface share one id with different names), so
-# removing a url can change the per-node min(name) — a per-pair count
-# table recomputes that min correctly from the survivors.
-# ---------------------------------------------------------------------------
-
-
-def entity_name_stats(triples: DataFrame) -> DataFrame:
-    """(node_id, name, n) — the maintained raw-node-stats index."""
-    return _endpoints(triples).groupBy("node_id", "name").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
-def entity_stats_patch(
-    old_stats: DataFrame,
-    old_triples: DataFrame,
-    new_triples: DataFrame,
-    changed_urls: DataFrame,
-) -> DataFrame:
-    """The new snapshot's entity_name_stats from the old index plus ONLY
-    the changed urls' endpoint contributions (counts are additive).
-
-    Both triple arguments are read only through changed-url semi-joins,
-    so callers holding partition-pruned views covering the changed urls
-    should pass those instead of the full tables — identical output,
-    O(delta partitions) scanned instead of the corpus."""
-    rem = (
-        _endpoints(old_triples.join(changed_urls, "url", "left_semi"))
-        .groupBy("node_id", "name")
-        .agg(F.count(F.lit(1)).alias("rem"))
-    )
-    add = (
-        _endpoints(new_triples.join(changed_urls, "url", "left_semi"))
-        .groupBy("node_id", "name")
-        .agg(F.count(F.lit(1)).alias("add"))
-    )
-    key = ["node_id", "name"]
-    return (
-        old_stats.join(rem, key, "full_outer")
-        .join(add, key, "full_outer")
-        .select(
-            *key,
-            (
-                F.coalesce("n", F.lit(0))
-                - F.coalesce("rem", F.lit(0))
-                + F.coalesce("add", F.lit(0))
-            ).alias("n"),
-        )
-        .filter(F.col("n") > 0)
-    )
-
-
-def nodes_from_name_stats(name_stats: DataFrame) -> DataFrame:
-    """entity_name_stats -> the build_entity_nodes view (node_id, name,
-    n_mentions) — O(entities), no corpus scan."""
-    return name_stats.groupBy("node_id").agg(
-        F.min("name").alias("name"), F.sum("n").alias("n_mentions")
-    )
-
-
-def bucket_sizes_patch(
-    old_sizes: DataFrame,
-    old_bands_raw: DataFrame,
-    new_bands_raw: DataFrame,
-    new_nodes: DataFrame,
-) -> DataFrame:
-    """The new snapshot's band_bucket_sizes from the maintained histogram
-    plus ONLY the removed/added nodes' band rows (sizes are additive).
-    Removed and added nodes are both subsets of the changed-url delta, so
-    at real scale both legs are key-pruned probes of the persisted band
-    tables, never a fresh full-table aggregation."""
-    removed = (
-        old_bands_raw.join(new_nodes.select("node_id"), "node_id", "left_anti")
-        .groupBy("band_key")
-        .agg(F.count(F.lit(1)).alias("rem"))
-    )
-    added = (
-        new_bands_raw.join(
-            old_bands_raw.select("node_id").distinct(), "node_id", "left_anti"
-        )
-        .groupBy("band_key")
-        .agg(F.count(F.lit(1)).alias("add"))
-    )
-    return (
-        old_sizes.join(removed, "band_key", "full_outer")
-        .join(added, "band_key", "full_outer")
-        .select(
-            "band_key",
-            (
-                F.coalesce("_bn", F.lit(0))
-                - F.coalesce("rem", F.lit(0))
-                + F.coalesce("add", F.lit(0))
-            ).alias("_bn"),
-        )
-        .filter(F.col("_bn") > 0)
-    )
-
-
-def bands_patch(old_bands_raw: DataFrame, new_nodes: DataFrame) -> DataFrame:
-    """The new snapshot's raw band table from the old index: bands depend
-    only on a node's own (immutable) name, so surviving nodes keep their
-    rows and only genuinely new node_ids are banded — O(delta) band
-    construction."""
-    surviving = old_bands_raw.join(
-        new_nodes.select("node_id"), "node_id", "left_semi"
-    )
-    fresh_nodes = new_nodes.join(
-        old_bands_raw.select("node_id").distinct(), "node_id", "left_anti"
-    )
-    return surviving.unionByName(lsh_bands_raw(fresh_nodes))
-
-
 def delta_ids(
     old_triples: DataFrame, new_triples: DataFrame, changed_urls: DataFrame
 ) -> DataFrame:
-    """Step 1: entities mentioned on a changed url in either snapshot.
-
-    Only changed-url rows contribute, so callers holding a
-    partition-pruned view covering the changed urls (e.g. the probe's
-    pb-bucketed triple tables) may pass it in place of the full tables —
-    the semi-join below cannot push a DataFrame key set into a parquet
-    scan, so pre-pruning is what turns this from O(corpus) to O(delta)
-    at scale."""
+    """One `node_id` column: entities mentioned on a changed url in
+    either snapshot."""
     return (
         _endpoint_ids(old_triples.join(changed_urls, "url", "left_semi"))
         .unionAll(
@@ -236,413 +61,23 @@ def delta_ids(
     )
 
 
-def cap_crossing_members(
-    old_bands_raw: DataFrame,
-    new_bands_raw: DataFrame,
-    delta: DataFrame,
-    old_sizes: DataFrame | None = None,
-    new_sizes: DataFrame | None = None,
-) -> DataFrame:
-    """Step 2b: node_ids of every band bucket whose size crossed
-    MAX_BUCKET between the two snapshots (ADVICE r03: the cap guard is
-    corpus-membership-dependent, so a delta node entering/leaving a
-    bucket near the cap creates or destroys pairs between two untouched
-    nodes). Only buckets containing a delta node can change size, so the
-    candidate keys are probed from the delta — O(|delta| * BANDS) keys,
-    never a full bucket-histogram diff.
-
-    old_sizes / new_sizes (optional): maintained band_bucket_sizes
-    histograms — when provided, bucket sizes come from a key-pruned join
-    against them instead of counting the band tables."""
-    from blarify_spark.plans.canonicalize import MAX_BUCKET
-
-    delta_keys = (
-        old_bands_raw.join(delta, "node_id", "left_semi")
-        .select("band_key")
-        .unionAll(
-            new_bands_raw.join(delta, "node_id", "left_semi").select("band_key")
-        )
-        .distinct()
-        .transform(cut_lazy)
-    )
-    if old_sizes is None:
-        o_sizes = (
-            old_bands_raw.join(delta_keys, "band_key", "left_semi")
-            .groupBy("band_key")
-            .agg(F.count(F.lit(1)).alias("o_n"))
-        )
-    else:
-        o_sizes = old_sizes.join(delta_keys, "band_key", "left_semi").select(
-            "band_key", F.col("_bn").alias("o_n")
-        )
-    if new_sizes is None:
-        n_sizes = (
-            new_bands_raw.join(delta_keys, "band_key", "left_semi")
-            .groupBy("band_key")
-            .agg(F.count(F.lit(1)).alias("n_n"))
-        )
-    else:
-        n_sizes = new_sizes.join(delta_keys, "band_key", "left_semi").select(
-            "band_key", F.col("_bn").alias("n_n")
-        )
-    crossed = (
-        o_sizes.join(n_sizes, "band_key", "full_outer")
-        .filter(
-            (F.coalesce("o_n", F.lit(0)) <= MAX_BUCKET)
-            != (F.coalesce("n_n", F.lit(0)) <= MAX_BUCKET)
-        )
-        .select("band_key")
-    )
-    return (
-        old_bands_raw.join(crossed, "band_key", "left_semi")
-        .select("node_id")
-        .unionAll(
-            new_bands_raw.join(crossed, "band_key", "left_semi").select(
-                "node_id"
-            )
-        )
-        .distinct()
-    )
-
-
-def affected_subgraph(
-    old_triples: DataFrame,
-    new_triples: DataFrame,
-    changed_urls: DataFrame,
-    old_mapping: DataFrame,
-    new_nodes: DataFrame,
-    bands: DataFrame,
-    extra_touched: DataFrame | None = None,
-    delta: DataFrame | None = None,
-) -> DataFrame:
-    """One `node_id` column: the entities whose canonical labels must be
-    recomputed (steps 1-4 of the module-docstring argument). Everything
-    outside this set provably keeps its old label. `bands` is the
-    lsh_bands table of the NEW snapshot (built once by the caller — the
-    persisted-index probe pattern); `new_nodes` the new entity table.
-
-    extra_touched: additional node_ids to fold into the touched set —
-    recanonicalize_affected passes the cap-transition members (step 2b);
-    without them the S-boundary argument only covers fixed bucket-cap
-    membership (use recanonicalize_affected as the entry point).
-    delta: pre-computed delta_ids (avoids recomputing when the caller
-    already needed it for the cap-transition probe)."""
-    # 1. delta entities: mentioned on a changed url in either snapshot
-    if delta is None:
-        delta = delta_ids(old_triples, new_triples, changed_urls).transform(
-            cut_lazy
-        )
-
-    # 2. LSH probe of the new corpus from the delta side only
-    probe_pairs = pairs_from_bands(bands, probe_ids=delta).transform(
-        cut_lazy
-    )
-    touched = (
-        delta.unionAll(probe_pairs.select(F.col("src").alias("node_id")))
-        .unionAll(probe_pairs.select(F.col("dst").alias("node_id")))
-    )
-    if extra_touched is not None:
-        touched = touched.unionAll(extra_touched.select("node_id"))
-    touched = touched.distinct()
-
-    # 3. affected old components
-    affected_canons = (
-        old_mapping.join(touched, "node_id", "left_semi")
-        .select("canon_id")
-        .distinct()
-    )
-
-    # 4. subgraph: current members of affected components + touched nodes
-    return (
-        old_mapping.join(affected_canons, "canon_id", "left_semi")
-        .select("node_id")
-        .unionAll(touched)
-        .distinct()
-        .join(new_nodes, "node_id", "left_semi")  # only nodes that still exist
-        .transform(cut_lazy)
-    )
-
-
-def recanonicalize_affected(
-    old_triples: DataFrame,
-    new_triples: DataFrame,
-    changed_urls: DataFrame,
-    old_mapping: DataFrame,
-    new_nodes: DataFrame | None = None,
-    bands_raw: DataFrame | None = None,
-    old_bands_raw: DataFrame | None = None,
-    bucket_sizes: DataFrame | None = None,
-    old_bucket_sizes: DataFrame | None = None,
-    old_triples_delta: DataFrame | None = None,
-    new_triples_delta: DataFrame | None = None,
-) -> DataFrame:
-    """Patched node_id -> canon_id mapping, equal to a full
-    connected-components rebuild over new_triples but recomputed only on
-    the components touched by changed pages.
-
-    old_triples / new_triples: linked triple tables of the two snapshots.
-    changed_urls: one `url` column (changed_url_set of classify_pages).
-    old_mapping: the previous (node_id, canon_id) mapping.
-    new_nodes / bands_raw (optional): the maintained incremental indexes
-    (nodes_from_name_stats of a patched entity_name_stats table, and a
-    bands_patch'ed raw band table) — with both provided, no O(corpus)
-    aggregation runs at all; without them they are rebuilt here.
-    old_bands_raw (optional): the PREVIOUS snapshot's raw band table —
-    the persisted index bands_raw was patched from. Needed for the
-    cap-transition check (step 2b); rebuilt from old_triples when absent
-    (one extra O(old corpus) columnar pass on the non-indexed path).
-    bucket_sizes / old_bucket_sizes (optional): maintained
-    band_bucket_sizes histograms of the two snapshots
-    (bucket_sizes_patch) — with them, neither the probe-time cap nor the
-    cap-transition check aggregates a band table.
-    old_triples_delta / new_triples_delta (optional): partition-pruned
-    views of the triple tables covering every changed url (e.g. the
-    probe's pb-bucketed affected partitions). The delta-entity step only
-    reads changed-url rows, and a DataFrame key set cannot push into a
-    parquet scan — with these views the step scans O(delta partitions)
-    instead of the full corpus. Results are identical by construction
-    (rows outside changed urls never contribute).
-    """
-    if new_nodes is None:
-        new_nodes = build_entity_nodes(new_triples).transform(cut_lazy)
-    # the LSH band table, built ONCE (or patched from the persisted index
-    # at real scale) and probed three times: delta probe, cap-transition
-    # key probe, subgraph pair pull
-    new_bands_raw = (
-        lsh_bands_raw(new_nodes) if bands_raw is None else bands_raw
-    ).transform(cut_lazy)
-    if bucket_sizes is None:
-        bucket_sizes = band_bucket_sizes(new_bands_raw)
-    bands = cap_bands(new_bands_raw, sizes=bucket_sizes).transform(cut_lazy)
-    if old_bands_raw is None:
-        old_bands_raw = lsh_bands_raw(
-            build_entity_nodes(old_triples)
-        ).transform(cut_lazy)
-    delta = delta_ids(
-        old_triples_delta if old_triples_delta is not None else old_triples,
-        new_triples_delta if new_triples_delta is not None else new_triples,
-        changed_urls,
-    ).transform(cut_lazy)
-    crossing = cap_crossing_members(
-        old_bands_raw,
-        new_bands_raw,
-        delta,
-        old_sizes=old_bucket_sizes,
-        new_sizes=bucket_sizes,
-    )
-    subgraph_ids = affected_subgraph(
-        old_triples,
-        new_triples,
-        changed_urls,
-        old_mapping,
-        new_nodes,
-        bands,
-        extra_touched=crossing,
-        delta=delta,
-    )
-    sub_nodes = new_nodes.join(subgraph_ids, "node_id", "left_semi")
-
-    # 5. pairs within S, using FULL-corpus bucket statistics (probe from S)
-    # so the MAX_BUCKET guard drops exactly the buckets a full rebuild
-    # would drop; both endpoints provably land in S (module docstring)
-    sub_pairs = (
-        pairs_from_bands(bands, probe_ids=subgraph_ids)
-        .join(subgraph_ids.withColumnRenamed("node_id", "src"), "src", "left_semi")
-        .join(subgraph_ids.withColumnRenamed("node_id", "dst"), "dst", "left_semi")
-    )
-    sub_mapping = connected_components(sub_nodes, sub_pairs)
-
-    # unaffected nodes keep their old labels; deleted nodes drop out
-    keep = (
-        old_mapping.join(new_nodes, "node_id", "left_semi")
-        .join(subgraph_ids, "node_id", "left_anti")
-    )
-    return keep.unionByName(sub_mapping.select("node_id", "canon_id"))
-
-
-def patch_canonical_tables(
-    old_nodes: DataFrame,
-    old_edges: DataFrame,
-    old_triples: DataFrame,
-    new_triples: DataFrame,
-    old_mapping: DataFrame,
-    new_mapping: DataFrame,
-    changed_urls: DataFrame,
-    name_stats: DataFrame | None = None,
-    old_triples_delta: DataFrame | None = None,
-    new_triples_delta: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Patch the materialized (nodes, edges) to the new snapshot given
-    the old tables and the patched mapping — only affected canons are
-    re-aggregated and only affected urls re-mapped.
-
-    old_triples_delta / new_triples_delta (optional): partition-pruned
-    views covering every changed url (see recanonicalize_affected) —
-    used ONLY for the changed-url endpoint step, which reads nothing
-    outside the changed urls; the full new_triples stays required for
-    the dirty-canon re-aggregation fallback and the edge rewrite (both
-    can touch unchanged pages).
-
-    old_triples is required for the dirty set (ADVICE r03): an entity
-    whose mention is REMOVED by a modified page but which survives on
-    unchanged pages keeps its node_id and canon, yet its mention count
-    (and possibly min name) shrank — only the OLD snapshot's endpoints
-    on changed urls reveal it.
-
-    name_stats (optional): the NEW snapshot's entity_name_stats index —
-    when provided, dirty canons re-aggregate from it (O(entities))
-    instead of re-scanning the triple table's endpoints.
-    """
-    # mapping rows that changed (new node, or canon re-labeled)
-    old_m = old_mapping.select(
-        "node_id", F.col("canon_id").alias("old_canon")
-    )
-    delta_nodes = (
-        new_mapping.join(old_m, "node_id", "left")
-        .filter(
-            F.col("old_canon").isNull()
-            | (F.col("old_canon") != F.col("canon_id"))
-        )
-        .select("node_id")
-        .transform(cut_lazy)
-    )
-    # gone nodes' canons also need re-aggregation (their counts shrink)
-    gone_nodes = old_mapping.join(
-        new_mapping, "node_id", "left_anti"
-    ).select("node_id")
-    # entities on changed urls: their mention counts changed. BOTH
-    # snapshots' endpoints: new-side for added mentions, old-side for
-    # removed mentions of entities that survive on unchanged pages
-    # (new-side alone misses them — their stale n_mentions/name would
-    # ship in the patched table)
-    _ntd = new_triples_delta if new_triples_delta is not None else new_triples
-    _otd = old_triples_delta if old_triples_delta is not None else old_triples
-    changed_ents = _endpoint_ids(
-        _ntd.join(changed_urls, "url", "left_semi")
-    ).unionAll(
-        _endpoint_ids(_otd.join(changed_urls, "url", "left_semi"))
-    )
-    dirty = (
-        delta_nodes.unionAll(gone_nodes)
-        .unionAll(changed_ents)
-        .distinct()
-        .transform(cut_lazy)
-    )
-
-    # affected canons, in BOTH labelings (old rows to drop, new to rebuild)
-    old_dirty_canons = (
-        old_mapping.join(dirty, "node_id", "left_semi")
-        .select("canon_id")
-        .distinct()
-    )
-    new_dirty_canons = (
-        new_mapping.join(dirty, "node_id", "left_semi")
-        .select("canon_id")
-        .distinct()
-        .transform(cut_lazy)
-    )
-    # every current member of a dirty canon (the whole group re-aggregates)
-    dirty_members = new_mapping.join(
-        new_dirty_canons, "canon_id", "left_semi"
-    ).select("node_id")
-
-    if name_stats is not None:
-        per_node = nodes_from_name_stats(
-            name_stats.join(dirty_members, "node_id", "left_semi")
-        )
-    else:
-        per_node = (
-            _endpoints(new_triples)
-            .join(dirty_members, "node_id", "left_semi")
-            .groupBy("node_id")
-            .agg(
-                F.min("name").alias("name"),
-                F.count(F.lit(1)).alias("n_mentions"),
-            )
-        )
-    rebuilt_nodes = (
-        per_node.join(new_mapping, "node_id")
-        .groupBy("canon_id")
-        .agg(F.min("name").alias("name"), F.sum("n_mentions").alias("n_mentions"))
-    )
-    nodes = old_nodes.join(
-        old_dirty_canons, "canon_id", "left_anti"
-    ).unionByName(rebuilt_nodes)
-
-    # edges: rewrite rows on changed urls or with a re-labeled endpoint.
-    # Short-circuit: when NO node changed labels (the common steady-state
-    # delta — content edits without entity-cluster movement), skip the two
-    # full-corpus semi-join scans entirely; the isEmpty probe is one tiny
-    # job over the (small) mapping join.
-    if delta_nodes.isEmpty():
-        rewrite_urls = changed_urls
-    else:
-        urls_relabel = (
-            new_triples.join(
-                delta_nodes.withColumnRenamed("node_id", "subj_id"),
-                "subj_id",
-                "left_semi",
-            )
-            .select("url")
-            .unionAll(
-                new_triples.join(
-                    delta_nodes.withColumnRenamed("node_id", "obj_id"),
-                    "obj_id",
-                    "left_semi",
-                ).select("url")
-            )
-        )
-        rewrite_urls = changed_urls.unionAll(urls_relabel).distinct()
-
-    smap = new_mapping.select(
-        F.col("node_id").alias("subj_id"), F.col("canon_id").alias("subj_canon")
-    )
-    omap = new_mapping.select(
-        F.col("node_id").alias("obj_id"), F.col("canon_id").alias("obj_canon")
-    )
-    rewritten = (
-        new_triples.join(rewrite_urls, "url", "left_semi")
-        .join(smap, "subj_id")
-        .join(omap, "obj_id")
-        .select(
-            "url",
-            "warc_ts",
-            "pred",
-            "span_start",
-            "span_end",
-            F.col("subj_canon").alias("subj_id"),
-            F.col("obj_canon").alias("obj_id"),
-            "subj",
-            "obj",
-        )
-        .filter(F.col("subj_id") != F.col("obj_id"))
-    )
-    edges = old_edges.join(rewrite_urls, "url", "left_anti").unionByName(
-        rewritten
-    )
-    return nodes, edges
-
-
 def incremental_update(
-    old_pages: DataFrame,
+    old_digests: DataFrame,
     new_pages: DataFrame,
-    old_triples: DataFrame,
-    old_nodes: DataFrame,
-    old_edges: DataFrame,
-    old_mapping: DataFrame,
+    old_linked: DataFrame,
     alias_df: DataFrame,
 ) -> dict[str, DataFrame]:
-    """End-to-end incremental update: re-extract + re-link ONLY changed
-    pages, patch the triple table, re-canonicalize only affected
-    components, and patch nodes/edges — the full blarify incremental
-    path (prebuilt/graph_builder.py:178-235 + the reverse-dependency
-    closure of project_graph_diff_creator.py:221-271) in one call.
+    """Update a snapshot to `new_pages`: classify against the previous
+    snapshot's digests (url + content_hash), re-extract and re-link ONLY
+    the changed pages, swap them into the previous linked table, and
+    canonicalize the result.
 
-    Returns {"triples", "nodes", "edges", "mapping", "changes"} — each
-    equal to a full rebuild of the new snapshot (pinned by
-    tests/test_recanon.py), at the cost of O(changed + affected), not
-    O(corpus).
+    Returns {"triples", "nodes", "edges", "mapping", "changes"}:
+    `triples` is the new linked table, nodes/edges/mapping its
+    canonicalization (equal to a full rebuild of the new snapshot),
+    `changes` the per-url classification.
     """
+    from blarify_spark.plans.canonicalize import canonicalize
     from blarify_spark.plans.diff import classify_pages
     from blarify_spark.plans.extract import (
         extract_all_stage,
@@ -651,38 +86,24 @@ def incremental_update(
     )
     from blarify_spark.plans.linking import resolve_triples
 
-    changes = classify_pages(old_pages, new_pages)
+    changes = classify_pages(old_digests, new_pages)
     changed = changed_url_set(changes).transform(cut_lazy)
 
-    # re-extract + re-link only the changed pages (one Python crossing
-    # over the delta, never the corpus); resolve_triples is the same
-    # single-aggregation linking plan run_pipeline's `linked` stage uses
-    affected_pages = new_pages.join(changed, "url", "left_semi")
-    ex = extract_all_stage(affected_pages)
+    # one Python crossing over the changed pages, never the corpus;
+    # resolve_triples is the linking plan of run_pipeline's `linked` stage
+    ex = extract_all_stage(new_pages.join(changed, "url", "left_semi"))
     fresh = resolve_triples(triples_from(ex), mentions_from(ex), alias_df)
-    new_triples = (
-        old_triples.join(changed, "url", "left_anti")
+    linked = (
+        old_linked.join(changed, "url", "left_anti")
         .unionByName(fresh)
         .transform(cut_lazy)
     )
-
-    new_mapping = recanonicalize_affected(
-        old_triples, new_triples, changed, old_mapping
-    )
-    nodes, edges = patch_canonical_tables(
-        old_nodes,
-        old_edges,
-        old_triples,
-        new_triples,
-        old_mapping,
-        new_mapping,
-        changed,
-    )
+    nodes, edges, mapping = canonicalize(linked)
     return {
-        "triples": new_triples,
+        "triples": linked,
         "nodes": nodes,
         "edges": edges,
-        "mapping": new_mapping,
+        "mapping": mapping,
         "changes": changes,
     }
 

@@ -64,6 +64,23 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     setattr(sc, marker, True)
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap for local mode: half of the host's memory, capped at
+    16g. In local mode the driver JVM is also every executor, and its
+    resident size runs well past -Xmx (metaspace, direct buffers, code
+    cache); the other half is left to that overhead and to the Python
+    workers. 16g when MemTotal cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{max(1024, min(16384, total_mb // 2))}m"
+    except OSError:
+        pass
+    return "16g"
+
+
 def get_spark(
     cores: int | None = None,
     app_name: str = "blarify_spark",
@@ -124,7 +141,10 @@ def get_spark(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
     )

@@ -29,9 +29,10 @@ Exactly-once: run ids are deterministic in the streaming batch_id
 resume-idempotent (plans/materialize.py), so a replayed micro-batch
 after a crash re-lands byte-identical tables instead of duplicating.
 
-At scale: the per-batch work is O(changed pages + affected components)
-(plans/recanon.py), the state read is one digests scan per batch, and
-nothing here adds a shuffle beyond the batch path's own plan.
+Per batch: extraction and linking run over the changed pages only, and
+canonicalization over the whole updated linked table
+(plans/recanon.py); the state read is one digests and one linked scan,
+and nothing here adds a shuffle beyond the batch path's own plan.
 """
 
 from __future__ import annotations
@@ -112,7 +113,7 @@ def kg_update_batch(
     with_workflows: bool = True,
 ) -> dict[str, DataFrame]:
     """Process ONE micro-batch: full pipeline for the first batch,
-    incremental patch (provenance + workflows + recanon) after."""
+    incremental update (provenance + workflows + recanon) after."""
     run_id = _run_id(batch_id)
     prev = latest_committed_run(out_dir, batch_id)
     if prev is None:

@@ -185,3 +185,47 @@ def test_cc_local_and_distributed_paths_agree(spark, monkeypatch):
         "x": "x", "y": "x",
         "solo": "solo",
     }
+
+
+def test_canonicalize_reads_relanded_path(spark, tmp_path):
+    """A parquet path re-landed in the same session (a deleted run
+    re-run under its run id: materialize_stage stages, then renames into
+    place) must canonicalize to its NEW rows, not to rows cached by an
+    earlier canonicalize of that path."""
+    import shutil
+
+    from blarify_spark.plans.materialize import materialize_stage
+
+    out_dir = str(tmp_path / "kg")
+
+    def land(subj, obj):
+        def compute():
+            return spark.createDataFrame(
+                [
+                    (
+                        "https://x.test/1",
+                        "acquired",
+                        f"id-{subj}",
+                        subj,
+                        subj,
+                        f"id-{obj}",
+                        obj,
+                        obj,
+                        0,
+                        10,
+                    )
+                ],
+                "url string, pred string, subj_id string, subj_name string, "
+                "subj string, obj_id string, obj_name string, obj string, "
+                "span_start int, span_end int",
+            ).withColumn("warc_ts", F.current_timestamp())
+
+        shutil.rmtree(out_dir, ignore_errors=True)
+        return materialize_stage(spark, out_dir, "r1", "linked", compute)
+
+    def names(linked):
+        nodes, _, _ = canonicalize(linked)
+        return {r["name"] for r in nodes.collect()}
+
+    assert names(land("Alpha", "Beta")) == {"Alpha", "Beta"}
+    assert names(land("Gamma", "Delta")) == {"Gamma", "Delta"}

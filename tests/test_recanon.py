@@ -1,21 +1,20 @@
-"""Affected-component re-canonicalization + labeled graph diff tests.
+"""Incremental update + labeled graph diff tests.
 
-Pins the round-3 incremental path against blarify's reverse-dependency
-closure semantics (project_graph_diff_creator.py:221-271): a modified
-page that introduces a bridging alias must MERGE the two clusters it
-connects WITHOUT a full rebuild, the patched mapping/nodes/edges must
-equal a full recompute, and unrelated components must stay outside the
-recomputed subgraph.
+incremental_update re-extracts only the changed pages and canonicalizes
+the updated linked table in full, so every delta must reproduce a full
+rebuild of the new snapshot: a bridging alias that MERGES two clusters,
+bucket-cap crossings in both directions, a removed mention of an entity
+that survives elsewhere, and a NIL name flip on page removal.
 """
 
 from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from blarify_spark.plans.canonicalize import build_entity_nodes, canonicalize
-from blarify_spark.plans.diff import classify_pages
 from blarify_spark.plans.extract import (
     extract_all_stage,
     mentions_from,
@@ -23,12 +22,10 @@ from blarify_spark.plans.extract import (
 )
 from blarify_spark.plans.linking import link_mentions, link_triples
 from blarify_spark.plans.recanon import (
-    affected_subgraph,
     changed_url_set,
+    incremental_update,
     labeled_edges_diff,
     labeled_nodes_diff,
-    patch_canonical_tables,
-    recanonicalize_affected,
 )
 from blarify_spark.sources.alias import alias_dict
 from blarify_spark.sources.pages import pages_from_rows
@@ -86,27 +83,49 @@ def _mapping_dict(mapping):
     return {r["node_id"]: r["canon_id"] for r in mapping.collect()}
 
 
-def test_recanon_merges_bridged_clusters_and_equals_full_rebuild(spark):
-    old_t = _linked(spark, SNAP1)
-    new_t = _linked(spark, SNAP2)
-    _, _, old_mapping = canonicalize(old_t)
+def _rows(df):
+    cols = sorted(df.columns)
+    return sorted(tuple(r) for r in df.select(*cols).collect())
 
-    changes = classify_pages(
-        pages_from_rows(spark, SNAP1), pages_from_rows(spark, SNAP2)
+
+def _update_vs_full(spark, snap_old, snap_new):
+    """(incremental_update of snap_old's linked table to snap_new, the
+    full canonicalization of snap_new's linked table as a dict), after
+    asserting every table of the first equals the second."""
+    old_t = _linked(spark, snap_old)
+    inc = incremental_update(
+        pages_from_rows(spark, snap_old),
+        pages_from_rows(spark, snap_new),
+        old_t,
+        alias_dict(spark),
     )
-    changed = changed_url_set(changes)
-    assert [r["url"] for r in changed.collect()] == ["https://r.test/a"]
+    full_t = _linked(spark, snap_new)
+    nodes, edges, mapping = canonicalize(full_t)
+    full = {"triples": full_t, "nodes": nodes, "edges": edges, "mapping": mapping}
+    for key in ("triples", "nodes", "edges", "mapping"):
+        assert _rows(inc[key]) == _rows(full[key]), key
+    return inc, full
 
-    inc = recanonicalize_affected(old_t, new_t, changed, old_mapping)
-    _, _, full = canonicalize(new_t)
-    assert _mapping_dict(inc) == _mapping_dict(full)
+
+@pytest.fixture(scope="module")
+def bridged(spark):
+    return _update_vs_full(spark, SNAP1, SNAP2)
+
+
+def test_recanon_merges_bridged_clusters_and_equals_full_rebuild(
+    spark, bridged
+):
+    inc, _ = bridged
+    assert [r["url"] for r in changed_url_set(inc["changes"]).collect()] == [
+        "https://r.test/a"
+    ]
 
     # the bridge actually merged the two clusters
     names = {
         r["name"]: r["node_id"]
-        for r in build_entity_nodes(new_t).collect()
+        for r in build_entity_nodes(inc["triples"]).collect()
     }
-    got = _mapping_dict(inc)
+    got = _mapping_dict(inc["mapping"])
     a, b, bridge = (
         names["Alphabet Systems"],
         names["Betamax Systems"],
@@ -114,66 +133,99 @@ def test_recanon_merges_bridged_clusters_and_equals_full_rebuild(spark):
     )
     assert got[a] == got[b] == got[bridge]
     # and they were NOT merged before the change
+    _, _, old_mapping = canonicalize(_linked(spark, SNAP1))
     old = _mapping_dict(old_mapping)
     assert old[a] != old[b]
 
 
-def test_recanon_subgraph_excludes_unrelated_components(spark):
-    """The 'without a full rebuild' claim, structurally: entities from
-    untouched far-away components never enter the recomputed subgraph."""
-    old_t = _linked(spark, SNAP1)
-    new_t = _linked(spark, SNAP2)
-    _, _, old_mapping = canonicalize(old_t)
-    changed = changed_url_set(
-        classify_pages(
-            pages_from_rows(spark, SNAP1), pages_from_rows(spark, SNAP2)
-        )
-    )
-    from blarify_spark.plans.canonicalize import lsh_bands
-
-    new_nodes = build_entity_nodes(new_t)
-    sub = {
-        r["node_id"]
-        for r in affected_subgraph(
-            old_t, new_t, changed, old_mapping, new_nodes, lsh_bands(new_nodes)
-        ).collect()
+def test_incremental_update_end_to_end_equals_full_rebuild(bridged):
+    """The one-call incremental path re-extracts ONLY the changed page
+    and returns the per-url classification alongside the tables (their
+    equality with a full rebuild is asserted in the fixture)."""
+    inc, _ = bridged
+    changes = {r["url"]: r["change"] for r in inc["changes"].collect()}
+    assert changes == {
+        "https://r.test/a": "MODIFIED",
+        "https://r.test/b": "UNCHANGED",
+        "https://r.test/far": "UNCHANGED",
+        "https://r.test/keep": "UNCHANGED",
     }
-    names = {r["name"]: r["node_id"] for r in new_nodes.collect()}
-    assert names["Alphabet Systems"] in sub
-    assert names["Betamax Systems"] in sub
-    for far in ["Zeta Industries", "Vandelay", "Gotham"]:
-        assert names[far] not in sub, far
 
 
-def test_patched_tables_equal_full_rebuild(spark):
-    old_t = _linked(spark, SNAP1)
-    new_t = _linked(spark, SNAP2)
-    old_nodes, old_edges, old_mapping = canonicalize(old_t)
-    changed = changed_url_set(
-        classify_pages(
-            pages_from_rows(spark, SNAP1), pages_from_rows(spark, SNAP2)
-        )
-    )
-    new_mapping = recanonicalize_affected(old_t, new_t, changed, old_mapping)
-    nodes, edges = patch_canonical_tables(
-        old_nodes, old_edges, old_t, new_t, old_mapping, new_mapping, changed
-    )
-    full_nodes, full_edges, _ = canonicalize(new_t)
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows(nodes) == rows(full_nodes)
-    assert rows(edges.select(sorted(edges.columns))) == rows(
-        full_edges.select(sorted(full_edges.columns))
-    )
+def test_min_name_flips_on_page_removal(spark):
+    """NIL entity names are not functionally dependent on the id: two
+    case variants of an unlinked surface share one node_id with different
+    names. Deleting the page that held the min-sorting variant must flip
+    the node's representative name."""
+    snap1 = [
+        _page("https://n.test/a", ["ZZYZX Widgets acquired Initech."]),
+        _page("https://n.test/b", ["Zzyzx Widgets acquired Hooli."]),
+    ]
+    snap2 = [snap1[1]]  # the page with the uppercase variant is deleted
+    inc, _ = _update_vs_full(spark, snap1, snap2)
+    got = {r["name"] for r in inc["nodes"].collect()}
+    assert "Zzyzx Widgets" in got and "ZZYZX Widgets" not in got
 
 
-def test_labeled_nodes_diff_tombstones_and_marks(spark):
-    old_t = _linked(spark, SNAP1)
-    new_t = _linked(spark, SNAP2)
-    old_nodes, old_edges, _ = canonicalize(old_t)
-    new_nodes, new_edges, _ = canonicalize(new_t)
+def test_removed_mention_of_surviving_entity(spark):
+    """A modified page DROPS a mention of an entity that survives on
+    unchanged pages with the same canon label: its mention count must
+    shrink, as in a full rebuild."""
+    snap1 = [
+        _page("https://m.test/keep", ["Initech works at Gotham."]),
+        _page("https://m.test/mod", ["Initech acquired Hooli."]),
+    ]
+    snap2 = [
+        snap1[0],
+        _page("https://m.test/mod", ["Globex acquired Hooli."]),
+    ]
+    inc, _ = _update_vs_full(spark, snap1, snap2)
+    got = {r["name"]: r["n_mentions"] for r in inc["nodes"].collect()}
+    assert got["Initech"] == 1
+
+
+def test_cap_transition_equals_full_rebuild(spark, monkeypatch):
+    """The MAX_BUCKET guard is corpus-membership-dependent — a delta node
+    entering/leaving a bucket near the cap creates or destroys pairs
+    between two UNTOUCHED nodes. Both directions must equal a full
+    rebuild:
+
+    * delete a member of an over-cap bucket -> bucket re-enabled ->
+      the two surviving (untouched) suffix variants MERGE;
+    * add a member to an at-cap bucket -> bucket dropped -> the
+      previously merged pair SPLITS.
+    """
+    from blarify_spark.plans import canonicalize as canon_mod
+
+    monkeypatch.setattr(canon_mod, "MAX_BUCKET", 2)
+
+    p1 = _page("https://c.test/1", ["Quantum Widgets acquired Initech."])
+    p2 = _page("https://c.test/2", ["Quantum Widgets Inc acquired Initech."])
+    p3 = _page("https://c.test/3", ["Quantum Widgets Ltd acquired Initech."])
+
+    def _canon_of(full, names):
+        ids = {
+            r["name"]: r["node_id"]
+            for r in build_entity_nodes(full["triples"]).collect()
+        }
+        m = _mapping_dict(full["mapping"])
+        return {m[ids[n]] for n in names}
+
+    # direction 1: 3 identical-normalized names -> bucket size 3 > cap
+    # (all singletons); deleting p3 re-enables the bucket -> merge
+    _, full = _update_vs_full(spark, [p1, p2, p3], [p1, p2])
+    assert len(_canon_of(full, ["Quantum Widgets", "Quantum Widgets Inc"])) == 1
+
+    # direction 2: start merged at bucket size 2 == cap; adding p3 pushes
+    # the bucket over the cap -> pairs vanish -> split
+    _, full = _update_vs_full(spark, [p1, p2], [p1, p2, p3])
+    names = ["Quantum Widgets", "Quantum Widgets Inc", "Quantum Widgets Ltd"]
+    assert len(_canon_of(full, names)) == 3
+
+
+def test_labeled_nodes_diff_tombstones_and_marks(spark, bridged):
+    old_nodes, old_edges, _ = canonicalize(_linked(spark, SNAP1))
+    new_nodes, new_edges = bridged[0]["nodes"], bridged[0]["edges"]
 
     nd = labeled_nodes_diff(old_nodes, new_nodes)
     by_change = {
@@ -196,245 +248,6 @@ def test_labeled_nodes_diff_tombstones_and_marks(spark):
     }
     assert ec.get("ADDED", 0) >= 1  # the bridge sentence's edge
     assert ec.get("UNCHANGED", 0) >= 1
-
-
-def test_incremental_update_end_to_end_equals_full_rebuild(spark):
-    """The one-call incremental path (re-extract changed pages only ->
-    patch triples -> scoped re-canonicalize -> patch tables) equals a
-    full rebuild of the new snapshot on every output table."""
-    from blarify_spark.plans.recanon import incremental_update
-
-    old_t = _linked(spark, SNAP1)
-    old_nodes, old_edges, old_mapping = canonicalize(old_t)
-    out = incremental_update(
-        pages_from_rows(spark, SNAP1),
-        pages_from_rows(spark, SNAP2),
-        old_t,
-        old_nodes,
-        old_edges,
-        old_mapping,
-        alias_dict(spark),
-    )
-    full_t = _linked(spark, SNAP2)
-    full_nodes, full_edges, full_mapping = canonicalize(full_t)
-
-    def rows(df):
-        cols = sorted(df.columns)
-        return sorted(tuple(r) for r in df.select(*cols).collect())
-
-    assert rows(out["triples"]) == rows(full_t)
-    assert rows(out["nodes"]) == rows(full_nodes)
-    assert rows(out["edges"]) == rows(full_edges)
-    assert _mapping_dict(out["mapping"]) == _mapping_dict(full_mapping)
-
-
-def test_maintained_indexes_equal_rebuilt(spark):
-    """The O(delta) index patches (entity_name_stats, raw bands) must
-    reproduce the from-scratch structures exactly, and feeding them into
-    recanonicalize/patch must still equal a full rebuild."""
-    from blarify_spark.plans.canonicalize import (
-        band_bucket_sizes,
-        lsh_bands_raw,
-    )
-    from blarify_spark.plans.recanon import (
-        bands_patch,
-        bucket_sizes_patch,
-        entity_name_stats,
-        entity_stats_patch,
-        nodes_from_name_stats,
-    )
-
-    old_t = _linked(spark, SNAP1)
-    new_t = _linked(spark, SNAP2)
-    old_nodes, old_edges, old_mapping = canonicalize(old_t)
-    changed = changed_url_set(
-        classify_pages(
-            pages_from_rows(spark, SNAP1), pages_from_rows(spark, SNAP2)
-        )
-    )
-
-    def rows(df):
-        cols = sorted(df.columns)
-        return sorted(tuple(r) for r in df.select(*cols).collect())
-
-    ns1 = entity_name_stats(old_t)
-    ns2 = entity_stats_patch(ns1, old_t, new_t, changed)
-    assert rows(ns2) == rows(entity_name_stats(new_t))
-    new_nodes = nodes_from_name_stats(ns2)
-    assert rows(new_nodes) == rows(build_entity_nodes(new_t))
-
-    b1 = lsh_bands_raw(build_entity_nodes(old_t))
-    b2 = bands_patch(b1, new_nodes)
-    want = lsh_bands_raw(build_entity_nodes(new_t))
-    assert rows(b2.drop("shingles")) == rows(want.drop("shingles"))
-
-    # third maintained index: the additive bucket-size histogram
-    sz1 = band_bucket_sizes(b1)
-    sz2 = bucket_sizes_patch(sz1, b1, b2, new_nodes)
-    assert rows(sz2) == rows(band_bucket_sizes(want))
-
-    inc = recanonicalize_affected(
-        old_t,
-        new_t,
-        changed,
-        old_mapping,
-        new_nodes=new_nodes,
-        bands_raw=b2,
-        old_bands_raw=b1,
-        bucket_sizes=sz2,
-        old_bucket_sizes=sz1,
-    )
-    _, _, full_m = canonicalize(new_t)
-    assert _mapping_dict(inc) == _mapping_dict(full_m)
-
-    nodes, edges = patch_canonical_tables(
-        old_nodes,
-        old_edges,
-        old_t,
-        new_t,
-        old_mapping,
-        inc,
-        changed,
-        name_stats=ns2,
-    )
-    full_nodes, full_edges, _ = canonicalize(new_t)
-    assert rows(nodes) == rows(full_nodes)
-    assert rows(edges) == rows(full_edges)
-
-
-def test_stats_patch_recomputes_min_name_on_removal(spark):
-    """NIL entity names are not functionally dependent on the id: two
-    case variants of an unlinked surface share one node_id with different
-    names. Deleting the page that held the min-sorting variant must flip
-    the node's representative name — a per-node additive count would get
-    this wrong; the per-(node_id, name) index recomputes it."""
-    from blarify_spark.plans.recanon import (
-        entity_name_stats,
-        entity_stats_patch,
-        nodes_from_name_stats,
-    )
-
-    snap1 = [
-        _page("https://n.test/a", ["ZZYZX Widgets acquired Initech."]),
-        _page("https://n.test/b", ["Zzyzx Widgets acquired Hooli."]),
-    ]
-    snap2 = [snap1[1]]  # the page with the uppercase variant is deleted
-    old_t = _linked(spark, snap1)
-    new_t = _linked(spark, snap2)
-    changed = changed_url_set(
-        classify_pages(
-            pages_from_rows(spark, snap1), pages_from_rows(spark, snap2)
-        )
-    )
-    ns2 = entity_stats_patch(
-        entity_name_stats(old_t), old_t, new_t, changed
-    )
-    got = {
-        r["name"]: r["n_mentions"]
-        for r in nodes_from_name_stats(ns2).collect()
-    }
-    want = {
-        r["name"]: r["n_mentions"]
-        for r in build_entity_nodes(new_t).collect()
-    }
-    assert got == want
-    assert "Zzyzx Widgets" in got and "ZZYZX Widgets" not in got
-
-
-def test_patch_detects_removed_mention_of_surviving_entity(spark):
-    """ADVICE r03 (high): a modified page DROPS a mention of an entity
-    that survives on unchanged pages with the same canon label. The
-    entity is in no new-side endpoint of the changed url and never
-    relabels, so a new-triples-only dirty set misses it and ships its
-    stale n_mentions. Patched tables must equal the full rebuild."""
-    snap1 = [
-        _page("https://m.test/keep", ["Initech works at Gotham."]),
-        _page("https://m.test/mod", ["Initech acquired Hooli."]),
-    ]
-    snap2 = [
-        snap1[0],
-        _page("https://m.test/mod", ["Globex acquired Hooli."]),
-    ]
-    old_t = _linked(spark, snap1)
-    new_t = _linked(spark, snap2)
-    old_nodes, old_edges, old_mapping = canonicalize(old_t)
-    changed = changed_url_set(
-        classify_pages(
-            pages_from_rows(spark, snap1), pages_from_rows(spark, snap2)
-        )
-    )
-    new_mapping = recanonicalize_affected(old_t, new_t, changed, old_mapping)
-    nodes, edges = patch_canonical_tables(
-        old_nodes, old_edges, old_t, new_t, old_mapping, new_mapping, changed
-    )
-    full_nodes, full_edges, _ = canonicalize(new_t)
-
-    def rows(df):
-        cols = sorted(df.columns)
-        return sorted(tuple(r) for r in df.select(*cols).collect())
-
-    assert rows(nodes) == rows(full_nodes)
-    assert rows(edges) == rows(full_edges)
-    # and the surviving entity's count actually shrank
-    got = {r["name"]: r["n_mentions"] for r in nodes.collect()}
-    assert got["Initech"] == 1
-
-
-def test_cap_transition_recomputes_untouched_bucket_members(
-    spark, monkeypatch
-):
-    """ADVICE r03 (medium): the MAX_BUCKET guard is corpus-membership-
-    dependent — a delta node entering/leaving a bucket near the cap
-    creates or destroys pairs between two UNTOUCHED nodes. Both
-    directions must equal a full rebuild:
-
-    * delete a member of an over-cap bucket -> bucket re-enabled ->
-      the two surviving (untouched) suffix variants MERGE;
-    * add a member to an at-cap bucket -> bucket dropped -> the
-      previously merged pair SPLITS.
-    """
-    from blarify_spark.plans import canonicalize as canon_mod
-
-    monkeypatch.setattr(canon_mod, "MAX_BUCKET", 2)
-
-    p1 = _page("https://c.test/1", ["Quantum Widgets acquired Initech."])
-    p2 = _page("https://c.test/2", ["Quantum Widgets Inc acquired Initech."])
-    p3 = _page("https://c.test/3", ["Quantum Widgets Ltd acquired Initech."])
-
-    def _canon_map(rows):
-        t = _linked(spark, rows)
-        _, _, m = canonicalize(t)
-        return t, m
-
-    def _assert_inc_equals_full(snap_old, snap_new):
-        old_t, old_m = _canon_map(snap_old)
-        new_t = _linked(spark, snap_new)
-        changed = changed_url_set(
-            classify_pages(
-                pages_from_rows(spark, snap_old),
-                pages_from_rows(spark, snap_new),
-            )
-        )
-        inc = recanonicalize_affected(old_t, new_t, changed, old_m)
-        _, _, full = canonicalize(new_t)
-        assert _mapping_dict(inc) == _mapping_dict(full)
-        return _mapping_dict(full)
-
-    # direction 1: 3 identical-normalized names -> bucket size 3 > cap
-    # (all singletons); deleting p3 re-enables the bucket -> merge
-    full = _assert_inc_equals_full([p1, p2, p3], [p1, p2])
-    names_t = _linked(spark, [p1, p2])
-    names = {r["name"]: r["node_id"] for r in build_entity_nodes(names_t).collect()}
-    assert full[names["Quantum Widgets"]] == full[names["Quantum Widgets Inc"]]
-
-    # direction 2: start merged at bucket size 2 == cap; adding p3 pushes
-    # the bucket over the cap -> pairs vanish -> split
-    full2 = _assert_inc_equals_full([p1, p2], [p1, p2, p3])
-    names_t2 = _linked(spark, [p1, p2, p3])
-    n2 = {r["name"]: r["node_id"] for r in build_entity_nodes(names_t2).collect()}
-    assert len({full2[n2[k]] for k in
-                ["Quantum Widgets", "Quantum Widgets Inc",
-                 "Quantum Widgets Ltd"]}) == 3
 
 
 def test_run_incremental_materializes_and_equals_full_pipeline(spark, tmp_path):
@@ -527,58 +340,3 @@ def test_run_incremental_refreshes_persisted_workflow_layer(spark, tmp_path):
         .collect()
     }
     assert PRED_BELONGS in wf_preds
-
-
-def test_delta_view_params_are_equality_preserving(spark):
-    """Round-5: the changed-url-only steps accept partition-pruned
-    triple views (the O(corpus) -> O(delta partitions) scan fix). Any
-    view COVERING the changed urls must yield bit-identical mappings
-    and patched tables."""
-    from blarify_spark.plans.canonicalize import canonicalize
-    from blarify_spark.plans.recanon import patch_canonical_tables
-
-    old_t = _linked(spark, SNAP1)
-    new_t = _linked(spark, SNAP2)
-    changes = classify_pages(
-        pages_from_rows(spark, SNAP1), pages_from_rows(spark, SNAP2)
-    )
-    changed = changed_url_set(changes)
-    old_nodes, old_edges, old_mapping = canonicalize(old_t)
-
-    # a covering pruned view: only rows whose url is in the changed set
-    # (the tightest legal view; a pb-partition view is a superset of it)
-    old_delta = old_t.join(changed, "url", "left_semi")
-    new_delta = new_t.join(changed, "url", "left_semi")
-
-    m_full = recanonicalize_affected(old_t, new_t, changed, old_mapping)
-    m_view = recanonicalize_affected(
-        old_t,
-        new_t,
-        changed,
-        old_mapping,
-        old_triples_delta=old_delta,
-        new_triples_delta=new_delta,
-    )
-    assert _mapping_dict(m_full) == _mapping_dict(m_view)
-
-    n_full, e_full = patch_canonical_tables(
-        old_nodes, old_edges, old_t, new_t, old_mapping, m_full, changed
-    )
-    n_view, e_view = patch_canonical_tables(
-        old_nodes,
-        old_edges,
-        old_t,
-        new_t,
-        old_mapping,
-        m_view,
-        changed,
-        old_triples_delta=old_delta,
-        new_triples_delta=new_delta,
-    )
-
-    def rows(df):
-        cols = sorted(df.columns)
-        return sorted(tuple(r) for r in df.select(*cols).collect())
-
-    assert rows(n_full) == rows(n_view)
-    assert rows(e_full) == rows(e_view)
