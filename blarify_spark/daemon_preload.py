@@ -14,8 +14,12 @@ worker inherit them through copy-on-write: fork stays cheap, and the
 first task a worker runs starts executing user code immediately. This is
 the standard preload-fork pattern (gunicorn ``--preload``, uWSGI lazy
 apps off) applied through Spark's public ``spark.python.daemon.module``
-hook; ``session.get_spark`` sets it, and ``SPARK_GRAFT_PY_DAEMON=``
-(empty) restores the stock daemon.
+hook. ``session.get_spark`` always sets it, and always builds a
+``local[...]`` master, so the daemon runs only in local mode, where the
+Python workers see this package on the driver's ``PYTHONPATH``. A cluster
+deployment that sets the same conf must ship the package to every
+executor (``spark-submit --py-files``): the executor's Python cannot
+start the daemon module otherwise, and every Python task fails.
 
 The preload is best-effort: any import failure degrades to exactly the
 stock daemon behaviour (workers import lazily as before) rather than

@@ -1,8 +1,8 @@
 """Lineage-cut helper for iterative loops.
 
 Every iterative plan in the engine (connected components, PageRank,
-k-hop/DFS frontiers, bottom-up rollup, GC) must cut lineage each round or
-the plan tree grows unboundedly. `localCheckpoint` stores blocks on
+k-hop/DFS frontiers) must cut lineage each round or the plan tree grows
+unboundedly. `localCheckpoint` stores blocks on
 executors — fast, but executor loss on a real cluster forces a full
 recompute (and can fail the job since lineage was truncated). Production
 runs therefore configure a reliable checkpoint directory

@@ -388,8 +388,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each peel round is one degree aggregate + one semi-join — frontier
     work proportional to the shrinking core, with a lineage cut per
-    round (the same iterate-to-fixpoint shape as the GC fixpoint in
-    plans/gc.py and blarify's empty-folder cascade). No SQL oracle: the
+    round (the same iterate-to-fixpoint shape as blarify's empty-folder
+    cascade). No SQL oracle: the
     peeling fixpoint is not monotonic (recursive CTEs can only grow),
     so correctness is pinned by test_analytics_ops.py against a local
     reference peeler."""

@@ -407,83 +407,6 @@ def kg_dependency_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ready
 
 
-@register("kg_hierarchy", oracle=None)
-def kg_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2 analog (blarify queries.py:269-375 build_hierarchy +
-    format_hierarchy_tree): assemble the nested tree from node/edge lists.
-
-    Spark shape: the iterative bottom-up readiness rollup — each node's
-    value is its JSON subtree, parents combine once all children are done;
-    cycles (the cyclic_links family) are closed by the stuck-twice break.
-    One row per entry-point root with its full JSON tree."""
-    from blarify_spark.plans.rollup import bottom_up_rollup, json_tree_combine
-
-    kg = _kg(spark)
-    nodes = kg["nodes"].select(F.col("canon_id").alias("node_id"), "name")
-    edges = kg["edges"].select(
-        F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
-    )
-    rolled = bottom_up_rollup(nodes, edges, json_tree_combine)
-    roots = nodes.join(
-        edges.select(F.col("dst").alias("node_id")).distinct(),
-        "node_id",
-        "left_anti",
-    )
-    return (
-        roots.join(rolled, "node_id")
-        .select("name", F.col("value").alias("tree_json"), "round", "forced")
-        .orderBy("name")
-    )
-
-
-@register("kg_rollup_process", oracle=None)
-def kg_rollup_process(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q15/Q16 full analog (blarify bottom_up_batch_processor.py:184-246):
-    the iterative claim->process->parents-ready loop with stuck-twice
-    cycle-break, over the canonical entity graph. Output: per-round
-    scheduling stats (the observable of the leasing state machine) — every
-    node must be processed, cycle members via the forced pass."""
-    from blarify_spark.plans.rollup import bottom_up_rollup, count_combine
-
-    kg = _kg(spark)
-    nodes = kg["nodes"].select(F.col("canon_id").alias("node_id"), "name")
-    edges = kg["edges"].select(
-        F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
-    )
-    rolled = bottom_up_rollup(nodes, edges, count_combine)
-    return (
-        rolled.groupBy("round", "forced")
-        .agg(
-            F.count(F.lit(1)).alias("n_processed"),
-            F.max(F.col("value").cast("int")).alias("max_subtree"),
-        )
-        .orderBy("round", "forced")
-    )
-
-
-@register("kg_gc_fixpoint", oracle=None)
-def kg_gc_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q18 analog (blarify prebuilt/graph_builder.py:247-259): iterate
-    delete-empty-containers to fixpoint over the url hierarchy
-    (host -> family prefix -> page -> entities). RAW-garbage pages extract
-    nothing, so their page containers empty out and the deletion cascades
-    into now-empty family prefixes. Output: per-round deletion counts."""
-    from blarify_spark.plans.gc import gc_empty_containers, url_hierarchy
-
-    kg = _kg(spark)
-    nodes, edges = url_hierarchy(kg["pages"], kg["triples"])
-    alive, deleted = gc_empty_containers(nodes, edges)
-    survivors = alive.agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit(0).alias("round"), F.lit("alive_at_fixpoint").alias("what"), "n"
-    )
-    per_round = (
-        deleted.groupBy("round")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("round", F.lit("deleted").alias("what"), "n")
-    )
-    return survivors.unionByName(per_round).orderBy("round", "what")
-
-
 @register("kg_folder_leaves", oracle=None)
 def kg_folder_leaves(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 analog (blarify queries.py:422-448): the leaf anti-join scoped

@@ -70,11 +70,8 @@ _ROWS_ONLY_PRIORITY = [
     "kg_diff_labeled_nodes",
     "kg_child_gather",  # round-1 driver crash; verified green r2 AND r3
     "multimodal_decode_features",  # same
-    "kg_hierarchy",
     "kg_workflow_bridges",
-    "kg_rollup_process",
     "kg_skeletons",
-    "kg_gc_fixpoint",
     "kg_folder_leaves",
     "kg_lookup_name_type",
     "kg_mention_edges",

@@ -41,7 +41,7 @@ def extract_all_stage(pages: DataFrame) -> DataFrame:
     pages): fat single-wave tasks push multi-thousand-row Arrow batches
     through conversion and lose all wave-level smoothing. Task weight
     is not knowable at plan time, so the split is left to the caller,
-    who does know (bench.py uses 4 tasks/core).
+    who does know.
 
     Output: pages columns + text, extract_status, mentions, triples.
     """

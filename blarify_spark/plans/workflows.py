@@ -6,9 +6,8 @@ WORKFLOW nodes keyed by workflow id with an entry point, member →
 workflow `BELONGS_TO_WORKFLOW` edges, and consecutive-member
 `WORKFLOW_STEP` edges carrying {order, workflow_id}
 (reference: blarify/repositories/graph_db_manager/queries.py:1600-1675).
-Until now the engine computed the traces (operators/kg_queries.py
-_workflow_traces) but never persisted them — a consumer could not query
-"which workflow does this entity belong to".
+Computing the traces alone (`workflow_traces`) would not let a consumer
+query "which workflow does this entity belong to"; persisting them does.
 
 Spark restatement, schema-compatible with the canonical tables so the
 workflow layer lives IN nodes/edges (not a side table):

@@ -89,12 +89,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    cores: local parallelism; default $SPARK_GRAFT_CPUS or 32.
+    cores: local parallelism; default $SPARK_GRAFT_CPUS, else the CPUs
+    this process may run on.
     shuffle_partitions: default = cores (local mode has no network
     shuffle, more partitions only add task overhead).
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(
+            os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        )
     if shuffle_partitions is None:
         shuffle_partitions = cores
 
@@ -121,24 +124,19 @@ def get_spark(
         # the bound is PER-PARTITION, independent of total input size.
         # (A/B at sf0.1 measured neutral — the headline joins are mostly
         # broadcast there — but at shuffle-bound scale the sorts are
-        # real; static planning is untouched, so bucketed-join plans and
-        # plan-pinned tests are unaffected.)
+        # real; static planning is untouched, so plan-pinned tests are
+        # unaffected.)
         .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_MAX", "67108864"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "67108864"
         )
         .config("spark.sql.session.timeZone", "UTC")
         # Preload-fork worker daemon: workers inherit pandas/pyarrow/this
         # package from the daemon via copy-on-write instead of importing
         # them per fresh worker (~0.6 s each, concurrency-stretched to
         # seconds of wall on a new session's first Python stage — see
-        # daemon_preload.py). Harmless on the JVM side; set empty env to
-        # fall back to the stock pyspark.daemon.
-        .config(
-            "spark.python.daemon.module",
-            os.environ.get("SPARK_GRAFT_PY_DAEMON", "blarify_spark.daemon_preload")
-            or "pyspark.daemon",
-        )
+        # daemon_preload.py). The master is always local, so the daemon
+        # runs where this package is importable.
+        .config("spark.python.daemon.module", "blarify_spark.daemon_preload")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config(

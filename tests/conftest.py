@@ -19,7 +19,8 @@ SF_DIR_MEDIUM = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=8, app_name="blarify_spark_tests", shuffle_partitions=8)
+    # sized to the host: $SPARK_GRAFT_CPUS, else the CPUs pytest may use
+    s = get_spark(app_name="blarify_spark_tests")
     yield s
     s.stop()
 

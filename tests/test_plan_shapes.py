@@ -20,10 +20,17 @@ def _window_specs(plan: str) -> list[str]:
     return re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
 
 
-def test_workflow_paths_windows_are_partitioned_by_root(spark):
-    from blarify_spark.operators.kg_queries import _kg, _workflow_traces
+def test_workflow_paths_windows_are_partitioned_by_root(spark, fixture_pages):
+    from blarify_spark.plans.canonicalize import canonicalize
+    from blarify_spark.plans.extract import extract_all_stage, mentions_from, triples_from
+    from blarify_spark.plans.linking import resolve_triples
+    from blarify_spark.plans.workflows import workflow_traces
+    from blarify_spark.sources.alias import alias_dict
 
-    plan = _plan(_workflow_traces(_kg(spark)))
+    ext = extract_all_stage(fixture_pages)
+    linked = resolve_triples(triples_from(ext), mentions_from(ext), alias_dict(spark))
+    nodes, edges, _ = canonicalize(linked)
+    plan = _plan(workflow_traces({"nodes": nodes, "edges": edges}))
     specs = _window_specs(plan)
     assert specs, "expected window operators in the trace plan"
     for spec in specs:

@@ -1,64 +1,11 @@
-"""Sink abstraction (S7-S10) + content-hash cache pattern tests.
+"""Content-hash cache pattern + fixture-graph cache release tests.
 
-Pins: both GraphSink backends implement the same idempotent keyed-upsert
-contract (blarify AbstractDbManager with Neo4j/FalkorDB backends,
-repositories/graph_db_manager/db_manager.py, falkordb_manager.py:41-88),
-and the dedup-before-expensive-UDF cache pattern
-(services/embedding_service.py:109-144).
+Pins the dedup-before-expensive-UDF cache pattern
+(blarify services/embedding_service.py:109-144) and that the
+`kg_queries` fixture-graph memos release every cached DataFrame.
 """
 
 from __future__ import annotations
-
-import pytest
-
-from blarify_spark.sinks import DuckDBSink, ParquetSink
-
-
-def _graph(spark, extra=False):
-    nodes = [("n1", "Ada", 3), ("n2", "Turing", 2)]
-    edges = [("n1", "n2", "cites", "u://a")]
-    if extra:
-        nodes.append(("n3", "Hopper", 1))
-        edges.append(("n2", "n3", "cites", "u://b"))
-    ndf = spark.createDataFrame(
-        nodes, "node_id string, name string, n_mentions long"
-    )
-    edf = spark.createDataFrame(edges, "src string, dst string, pred string, url string")
-    return ndf, edf
-
-
-@pytest.fixture(params=["parquet", "duckdb"])
-def sink(request, spark, tmp_path):
-    if request.param == "parquet":
-        yield ParquetSink(spark, str(tmp_path / "graph"))
-    else:
-        s = DuckDBSink(str(tmp_path / "graph.duckdb"))
-        yield s
-        s.close()
-
-
-def test_sink_save_is_idempotent(spark, sink):
-    nodes, edges = _graph(spark)
-    sink.save_graph(nodes, edges)
-    assert sink.counts() == (2, 1)
-    sink.save_graph(nodes, edges)  # re-apply: merge, not duplicate
-    assert sink.counts() == (2, 1)
-
-
-def test_sink_upsert_updates_and_inserts(spark, sink):
-    nodes, edges = _graph(spark)
-    sink.save_graph(nodes, edges)
-    nodes2, edges2 = _graph(spark, extra=True)
-    sink.save_graph(nodes2, edges2)
-    assert sink.counts() == (3, 2)
-
-
-def test_sink_detach_delete(spark, sink):
-    nodes, edges = _graph(spark, extra=True)
-    sink.save_graph(nodes, edges)
-    sink.delete_nodes_by_key(["n2"])
-    # n2 gone AND both edges touching n2 gone (detach semantics)
-    assert sink.counts() == (2, 0)
 
 
 def test_content_hash_cache_computes_once_per_distinct(spark):

@@ -47,109 +47,6 @@ def test_streaming_incremental_exactly_once(spark, tmp_path):
     assert n2 == batch_n
 
 
-def test_stateful_sessionize_state_survives_across_batches(spark, tmp_path):
-    """applyInPandasWithState: open sessions live in the state store
-    across separate availableNow runs (separate micro-batch executions
-    sharing one checkpoint); a later batch's events close them."""
-    from datetime import datetime, timedelta
-
-    from blarify_spark.sources.pages import PAGES_SCHEMA
-    from blarify_spark.streaming.pipeline import stream_pages
-    from blarify_spark.streaming.stateful import sessionize_stream
-
-    src = str(tmp_path / "src3")
-    out = str(tmp_path / "out3")
-    ckpt = str(tmp_path / "ckpt3")
-    t0 = datetime(2025, 1, 1, 0, 0, 0)
-
-    def _pages(specs):
-        rows = [
-            (f"https://{h}/p{i}", t0 + timedelta(minutes=m), None, "x", "en", "t")
-            for i, (h, m) in enumerate(specs)
-        ]
-        # one file per batch -> one deterministic micro-batch per run
-        return spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1)
-
-    def _run():
-        q = (
-            sessionize_stream(stream_pages(spark, src))
-            .writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .start()
-        )
-        q.awaitTermination()
-
-    # batch 1: host a gets 3 pages in minutes 0-2 (one open session);
-    # host b gets 1 page at minute 5
-    _pages([("a.test", 0), ("a.test", 1), ("a.test", 2), ("b.test", 5)]).write.mode(
-        "append"
-    ).parquet(src)
-    _run()
-    assert spark.read.parquet(out).count() == 0  # nothing closed yet
-
-    # batch 2: 60 minutes later both hosts return -> both old sessions
-    # close (state recovered from the checkpointed state store)
-    _pages([("a.test", 62), ("b.test", 65)]).write.mode("append").parquet(src)
-    _run()
-    got = {
-        r["host"]: (r["session_start"], r["session_end"], r["n_pages"])
-        for r in spark.read.parquet(out).collect()
-    }
-    epoch = int(t0.timestamp())
-    assert got["a.test"] == (epoch, epoch + 120, 3)
-    assert got["b.test"] == (epoch + 300, epoch + 300, 1)
-
-
-def test_stateful_sessionize_merges_out_of_order_batches(spark, tmp_path):
-    """Late events arriving in a LATER micro-batch but earlier in event
-    time merge into the open session (extending its start) instead of
-    corrupting it."""
-    from datetime import datetime, timedelta
-
-    from blarify_spark.sources.pages import PAGES_SCHEMA
-    from blarify_spark.streaming.pipeline import stream_pages
-    from blarify_spark.streaming.stateful import sessionize_stream
-
-    src = str(tmp_path / "src4")
-    out = str(tmp_path / "out4")
-    ckpt = str(tmp_path / "ckpt4")
-    t0 = datetime(2025, 1, 1, 0, 0, 0)
-
-    def _write(minutes):
-        rows = [
-            (f"https://c.test/p{m}", t0 + timedelta(minutes=m), None, "x", "en", "t")
-            for m in minutes
-        ]
-        spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    def _run():
-        q = (
-            sessionize_stream(stream_pages(spark, src))
-            .writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .start()
-        )
-        q.awaitTermination()
-
-    _write([2])  # newest event first
-    _run()
-    _write([0, 1])  # older events arrive late
-    _run()
-    _write([90])  # far beyond the gap: closes the merged session
-    _run()
-    got = [tuple(r) for r in spark.read.parquet(out).collect()]
-    epoch = int(t0.timestamp())
-    assert got == [("c.test", epoch, epoch + 120, 3)]
-
-
 def test_streaming_windowed_counts_with_watermark(spark, tmp_path):
     src = str(tmp_path / "src2")
     pages_from_rows(spark, corpus.generate_pages(32)).write.mode(
@@ -179,56 +76,6 @@ def test_streaming_windowed_counts_with_watermark(spark, tmp_path):
         extract_text_stage(pages_from_rows(spark, rows))
     ).count()
     assert total == expected
-
-
-def test_stateful_sessionize_far_late_event_is_own_session(spark, tmp_path):
-    """A late event arriving more than a gap BEFORE the open session's
-    start must close as its own earlier session, not merge backwards
-    (ADVICE r02: open [60min] + late ts=0 is two sessions, not one)."""
-    from datetime import datetime, timedelta
-
-    from blarify_spark.sources.pages import PAGES_SCHEMA
-    from blarify_spark.streaming.pipeline import stream_pages
-    from blarify_spark.streaming.stateful import sessionize_stream
-
-    src = str(tmp_path / "src5")
-    out = str(tmp_path / "out5")
-    ckpt = str(tmp_path / "ckpt5")
-    t0 = datetime(2025, 1, 1, 0, 0, 0)
-
-    def _write(minutes):
-        rows = [
-            (f"https://d.test/p{m}", t0 + timedelta(minutes=m), None, "x", "en", "t")
-            for m in minutes
-        ]
-        spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    def _run():
-        q = (
-            sessionize_stream(stream_pages(spark, src))
-            .writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .start()
-        )
-        q.awaitTermination()
-
-    _write([60])  # open session at minute 60
-    _run()
-    _write([0, 1])  # VERY late pair, > gap before the open start
-    _run()
-    _write([200])  # close everything older
-    _run()
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    epoch = int(t0.timestamp())
-    assert got == [
-        ("d.test", epoch, epoch + 60, 2),  # the late pair, own session
-        ("d.test", epoch + 3600, epoch + 3600, 1),  # original open session
-    ]
 
 
 def test_streaming_kg_update_matches_batch_incremental(spark, tmp_path):
@@ -310,69 +157,3 @@ def test_streaming_kg_update_matches_batch_incremental(spark, tmp_path):
         os.path.join(out_s, "b000001", "crawl_chain")
     ).orderBy("ord")
     assert [r["crawl_id"] for r in chain.collect()] == ["b000000", "b000001"]
-
-
-def test_tws_burst_detector_matches_batch(spark, tmp_path):
-    """transformWithStateInPandas burst detector vs the batch operator —
-    SKIPPED where google.protobuf is absent (the TWS state-server
-    protocol needs it; this sandbox has no protobuf and no pip)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf.descriptor")
-    _run_burst_stream_test(spark, tmp_path, use_tws=True)
-
-
-def test_v1_burst_detector_matches_batch(spark, tmp_path):
-    """applyInPandasWithState burst detector emits exactly the batch
-    RANGE-frame operator's rows when the stream arrives in event-time
-    order across TWO separate availableNow runs (state and emissions
-    survive the checkpoint boundary)."""
-    _run_burst_stream_test(spark, tmp_path, use_tws=False)
-
-
-def _run_burst_stream_test(spark, tmp_path, use_tws: bool):
-    from blarify_spark.operators.temporal import error_burst_windows
-    from blarify_spark.sources.tables import load_tables
-    from blarify_spark.streaming.stateful import burst_stream, burst_stream_v1
-    from tests.conftest import SF_DIR_MEDIUM
-
-    src = str(tmp_path / "ev_src")
-    out = str(tmp_path / "ev_out")
-    ckpt = str(tmp_path / "ev_ckpt")
-
-    ev = load_tables(spark, SF_DIR_MEDIUM, ["events"])["events"]
-    split_ts = "2024-01-15 00:00:00"
-    ev.filter(F.col("ts") < split_ts).coalesce(1).write.mode("append").parquet(src)
-
-    mk = burst_stream if use_tws else burst_stream_v1
-
-    def run() -> None:
-        stream = (
-            spark.readStream.schema(ev.schema).parquet(src)
-        )
-        q = (
-            mk(stream)
-            .writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .option("path", out)
-            .format("parquet")
-            .start()
-        )
-        q.awaitTermination()
-
-    run()
-    n1 = spark.read.parquet(out).count()
-
-    ev.filter(F.col("ts") >= split_ts).coalesce(1).write.mode("append").parquet(src)
-    run()
-
-    got = {
-        (r["user_id"], r["event_id"]): r["errs_24h"]
-        for r in spark.read.parquet(out).collect()
-    }
-    expected = {
-        (r["user_id"], r["event_id"]): r["errs_24h"]
-        for r in error_burst_windows(spark, SF_DIR_MEDIUM).collect()
-    }
-    assert got == expected
-    assert 0 < n1 < len(got), "both batches must contribute emissions"

@@ -9,7 +9,8 @@ known expected outputs, mirroring the reference's workflow fixtures
 
 from __future__ import annotations
 
-from blarify_spark.operators.kg_queries import _workflow_traces, workflow_bridges
+from blarify_spark.operators.kg_queries import workflow_bridges
+from blarify_spark.plans.workflows import workflow_traces
 
 
 def _kg_of(spark, nodes: list[tuple[str, str]], edges: list[tuple[str, str]]):
@@ -22,7 +23,7 @@ def _kg_of(spark, nodes: list[tuple[str, str]], edges: list[tuple[str, str]]):
 def _traces(spark, nodes, edges):
     return {
         (r["root_name"], r["path_str"]): (r["path_rank"], r["lcp"])
-        for r in _workflow_traces(_kg_of(spark, nodes, edges)).collect()
+        for r in workflow_traces(_kg_of(spark, nodes, edges)).collect()
     }
 
 
