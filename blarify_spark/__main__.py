@@ -59,11 +59,15 @@ def main(argv: list[str] | None = None) -> int:
 
         pages = scan_pages(read_pages(spark, args.pages))
 
-    from blarify_spark.plans.materialize import run_incremental, run_pipeline
+    from blarify_spark.plans.materialize import (
+        read_manifest,
+        run_incremental,
+        run_pipeline,
+    )
 
     t0 = time.perf_counter()
     if args.update_from_run:
-        tables = run_incremental(
+        run_incremental(
             spark,
             pages,
             args.out,
@@ -72,9 +76,14 @@ def main(argv: list[str] | None = None) -> int:
             resume=not args.no_resume,
         )
     else:
-        tables = run_pipeline(
+        run_pipeline(
             spark, pages, args.out, run_id=args.run_id, resume=not args.no_resume
         )
+
+    def rows_out(stage: str) -> int:
+        # the committed stage's manifest row count: no Spark job
+        return read_manifest(args.out, args.run_id, stage)["rows_out"]
+
     summary = {
         "out": args.out,
         "run_id": args.run_id,
@@ -82,9 +91,9 @@ def main(argv: list[str] | None = None) -> int:
         # entity-RESOLVED triple count — same stage and semantics for
         # full and incremental runs (the raw pre-linking stage only
         # exists on full runs, so it never appears in the summary)
-        "linked_triples": tables["linked"].count(),
-        "nodes": tables["nodes"].count(),
-        "edges": tables["edges"].count(),
+        "linked_triples": rows_out("linked"),
+        "nodes": rows_out("nodes"),
+        "edges": rows_out("edges"),
         "wall_sec": round(time.perf_counter() - t0, 2),
     }
     print(json.dumps(summary))

@@ -429,6 +429,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each bit j is the sign of sum over tokens of (2*bit_j(xxhash64(tok))-1)
     — all native expressions, no UDF. Candidates from 4x8-bit band
     equality; verified with bit_count(xor) <= 3.
+
+    Assumes `doc_id` is unique in `documents`: the votes aggregate by
+    doc_id, so rows sharing one would pool their tokens into one simhash
+    and fan out in the join back onto `docs`.
     """
     t = load_tables(spark, sf_dir, ["documents"])
     toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)

@@ -646,13 +646,17 @@ def kg_pagerank(
                 ).alias("rank"),
             )
             if it % 2 == 1:
-                # lazy cut (kcore/workflows treatment, r6): the checkpoint
-                # materializes inside the next round's join — which covers
-                # every partition — instead of as a standalone job per
-                # cut; 5 intermediate driver actions fuse into the final
-                # one. The LAST cut below stays eager: it must
-                # materialize before the finally-block unpersists the
-                # caches the lineage reads.
+                # lazy cut (kcore/workflows treatment, r6): no action runs
+                # between rounds, so every deferred cut materializes
+                # inside the final eager cut below, not as a standalone
+                # job per cut. With a reliable checkpoint dir set, Spark
+                # checkpoints only the nearest marked RDD
+                # (spark.checkpoint.checkpointAllMarkedAncestors is off),
+                # so these intermediate cuts never become reliable
+                # checkpoints and the final one writes after computing
+                # the whole multi-round lineage. The LAST cut stays
+                # eager: it must materialize before the finally-block
+                # unpersists the caches the lineage reads.
                 ranks = ranks.transform(cut_lazy)
         # eager cut: ranks are materialized independent of the caches
         ranks = ranks.transform(cut_lineage)

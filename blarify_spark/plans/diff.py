@@ -8,10 +8,10 @@ blarify/project_graph_diff_creator.py:131-179, updater
 blarify/project_graph_updater.py:61-69).
 
 Spark restatement: one full-outer join of the two snapshots on url with
-content-hash comparison classifies every page; extraction is recomputed
-only for added|modified urls; the final triple table is
-(previous minus affected urls) union (recomputed) — deterministic keys
-make the merge idempotent, mirroring apoc.merge upserts
+content-hash comparison classifies every page. plans/recanon.py then
+re-extracts only the changed urls; the new linked table is (previous
+minus changed urls) union (recomputed) — deterministic keys make the
+merge idempotent, mirroring apoc.merge upserts
 (neo4j_manager.py:128-142).
 """
 
@@ -20,8 +20,6 @@ from __future__ import annotations
 import warnings
 
 from pyspark.sql import DataFrame, functions as F
-
-from blarify_spark.plans.extract import extract_text_stage, triples_stage
 
 
 def _content_hash(df: DataFrame) -> F.Column:
@@ -207,39 +205,3 @@ def classify_pages(
         "new_hash",
     )
     return others.unionByName(moved)
-
-
-def incremental_triples(
-    old_pages: DataFrame,
-    new_pages: DataFrame,
-    old_triples: DataFrame,
-) -> DataFrame:
-    """Recompute extraction only for changed pages; merge with previous.
-
-    Returns the new triples table:
-      previous triples for UNCHANGED urls
-      + freshly extracted triples for ADDED|MODIFIED urls
-      (DELETED urls drop out — the detach-delete analog,
-      neo4j_manager.py:210-224).
-    """
-    changes = classify_pages(old_pages, new_pages)
-    affected = changes.filter(
-        F.col("change").isin("ADDED", "MODIFIED", "MOVED")
-    ).select("url")
-    # previous triples to drop: modified/deleted urls PLUS the former url
-    # of any moved page (its triples now carry the new url)
-    stale_or_gone = (
-        changes.filter(F.col("change").isin("MODIFIED", "DELETED"))
-        .select("url")
-        .unionAll(
-            changes.filter(F.col("old_url").isNotNull()).select(
-                F.col("old_url").alias("url")
-            )
-        )
-        .distinct()
-    )
-
-    keep = old_triples.join(stale_or_gone, "url", "left_anti")
-    recompute_pages = new_pages.join(affected, "url", "left_semi")
-    fresh = triples_stage(extract_text_stage(recompute_pages))
-    return keep.unionByName(fresh, allowMissingColumns=True)

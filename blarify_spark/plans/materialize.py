@@ -11,10 +11,14 @@ restatement (SURVEY.md Q16 / §3.2):
   `USING iceberg`; snapshot commit = our _SUCCESS marker + manifest row)
 * idempotency comes from deterministic content-derived keys plus
   dropDuplicates before write — a re-run produces byte-identical tables
-* the checkpoint manifest is a per-(run_id, stage) record with
-  per-partition lineage (partition id, row count) written ONLY after the
-  stage's data commit succeeds; resume consults it and replays only
-  missing stages — kill-after-stage-k then rerun yields identical output
+* the checkpoint manifest is a per-(run_id, stage) record with one
+  lineage row per committed data file (writer partition id, row count),
+  read from the parquet footers on the driver — no Spark job — and
+  written ONLY after the stage's data commit succeeds; resume consults
+  it and replays only missing stages — kill-after-stage-k then rerun
+  yields identical output
+* a fresh commit runs only its write: the table is read back under the
+  schema it was written with, so no schema-inference job runs
 * head-entity skew at write time is handled by salted repartitioning:
   the shuffle key is (subj_id, salt) so one dominant entity spreads over
   SALT_BUCKETS writers instead of one straggler task
@@ -24,11 +28,12 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from blarify_spark.functions.checkpoint import cut_lineage as _cut
 
@@ -65,29 +70,53 @@ def read_manifest(out_dir: str, run_id: str, stage: str) -> dict:
         return json.load(fh)
 
 
-def _commit_stage(
-    df: DataFrame, out_dir: str, run_id: str, stage: str, path: str
-) -> None:
-    """Write per-partition lineage rows, then the manifest marker.
+_DATA_FILE = re.compile(r"part-(\d+)-.*\.parquet")
 
-    The data files were already committed (parquet _SUCCESS) by the
-    caller; the manifest write is the stage's commit point — a crash
-    between data write and manifest write causes a clean re-write of the
-    same deterministic data on resume (idempotent), never a half-read.
+
+def _file_lineage(path: str) -> list[dict]:
+    """One lineage row per committed data file: the writer partition
+    from its `part-NNNNN` name and the row count from its parquet footer.
+    Read on the driver with pyarrow, so no Spark job runs. Hidden
+    (`_`/`.`) entries are skipped, as the parquet reader skips them."""
+    import pyarrow.parquet as pq
+
+    rows = []
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = [d for d in dirnames if d[0] not in "_."]
+        for name in filenames:
+            m = _DATA_FILE.fullmatch(name)
+            if m is None:
+                continue
+            fpath = os.path.join(dirpath, name)
+            rows.append(
+                {
+                    "partition_id": int(m.group(1)),
+                    "file": os.path.relpath(fpath, path),
+                    "rows_out": pq.read_metadata(fpath).num_rows,
+                }
+            )
+    return sorted(rows, key=lambda r: (r["partition_id"], r["file"]))
+
+
+def _commit_stage(out_dir: str, run_id: str, stage: str, path: str) -> None:
+    """Write the stage's lineage rows, one per committed data file, then
+    the manifest marker.
+
+    The data files were already committed (parquet _SUCCESS + atomic
+    rename) by the caller; their footers give each file's writer
+    partition and row count. The manifest write is the stage's commit
+    point — a crash between data write and manifest write causes a
+    clean re-write of the same deterministic data on resume
+    (idempotent), never a half-read.
     """
-    lineage = [
-        {"partition_id": int(r["pid"]), "rows_out": int(r["n"])}
-        for r in df.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    ]
+    lineage = _file_lineage(path)
     manifest = {
         "run_id": run_id,
         "stage": stage,
         "path": path,
         "rows_out": sum(r["rows_out"] for r in lineage),
-        "n_partitions": len(lineage),
-        "lineage": sorted(lineage, key=lambda r: r["partition_id"]),
+        "n_partitions": len({r["partition_id"] for r in lineage}),
+        "lineage": lineage,
     }
     mpath = _manifest_path(out_dir, run_id, stage)
     os.makedirs(os.path.dirname(mpath), exist_ok=True)
@@ -95,6 +124,37 @@ def _commit_stage(
     with open(tmp, "w") as fh:
         json.dump(manifest, fh, indent=1)
     os.replace(tmp, mpath)  # atomic rename = commit
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """`dt` with every nested field, element and value nullable, as the
+    parquet writer stores it."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _written_schema(
+    df: DataFrame, partition_cols: list[str] | None
+) -> T.StructType:
+    """The schema `spark.read.parquet` infers for `df` once written:
+    every field nullable, partition columns last. Reading the table back
+    under it runs no schema-inference job."""
+    fields = _nullable(df.schema).fields
+    parts = partition_cols or []
+    return T.StructType(
+        [f for f in fields if f.name not in parts]
+        + [f for p in parts for f in fields if f.name == p]
+    )
 
 
 def materialize_stage(
@@ -130,6 +190,10 @@ def materialize_stage(
     A complete-but-uncommitted final directory (winner crashed between
     rename and manifest) is adopted and committed on the next attempt;
     a partial legacy directory (no parquet _SUCCESS) is discarded.
+
+    A fresh commit runs only the write's Spark jobs: the manifest's
+    lineage comes from the parquet footers, and the returned DataFrame
+    reads the table under the schema it was written with.
     """
     path = os.path.join(out_dir, run_id, stage)
     if resume and stage_committed(out_dir, run_id, stage):
@@ -138,7 +202,7 @@ def materialize_stage(
     def _adopt() -> DataFrame:
         out = spark.read.parquet(path)
         if not stage_committed(out_dir, run_id, stage):
-            _commit_stage(out, out_dir, run_id, stage, path)
+            _commit_stage(out_dir, run_id, stage, path)
         return out
 
     if os.path.isdir(path):
@@ -173,9 +237,8 @@ def materialize_stage(
         # lost the race — a concurrent writer claimed the path first
         shutil.rmtree(staging, ignore_errors=True)
         return _adopt()
-    out = spark.read.parquet(path)
-    _commit_stage(out, out_dir, run_id, stage, path)
-    return out
+    _commit_stage(out_dir, run_id, stage, path)
+    return spark.read.schema(_written_schema(df, partition_cols)).parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -495,56 +558,3 @@ def run_incremental(
         "prov_edges": prov_edges,
         "crawl_chain": crawl_chain,
     }
-
-
-# ---------------------------------------------------------------------------
-# Idempotent key-based upsert (MERGE INTO analog)
-# ---------------------------------------------------------------------------
-
-
-def upsert_parquet(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    path: str,
-    keys: list[str],
-) -> DataFrame:
-    """Key-based upsert into a parquet table (Iceberg `MERGE INTO` stand-in).
-
-    Existing rows whose key matches an incoming row are replaced; others
-    are retained — exactly apoc.merge.node semantics
-    (reference: blarify/repositories/graph_db_manager/neo4j_manager.py:128-142)
-    expressed as anti-join + union + atomic overwrite. With Iceberg this
-    whole function is one `MERGE INTO` statement; the caller contract
-    (idempotent re-application) is identical.
-    """
-    import shutil
-
-    old = path + ".__old__"
-    # crash recovery: a previous upsert can die between rename(path, old)
-    # and rename(tmp, path), leaving the live path absent while `old`
-    # holds the ONLY copy of the table. Restore it before reading —
-    # rmtree'ing it here (as a "stray") would silently drop every prior
-    # row on the recovery run.
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    if os.path.exists(path):
-        existing = spark.read.parquet(path)
-        keep = existing.join(
-            new_rows.select(*keys).dropDuplicates(keys), keys, "left_anti"
-        )
-        merged = keep.unionByName(new_rows, allowMissingColumns=True)
-    else:
-        merged = new_rows
-    # stage to a tmp dir, rename the live table ASIDE, then rename staging
-    # into place. A crash in the tiny window between the two renames leaves
-    # the live path absent but `old` intact — the entry guard above
-    # restores it on the next run, so no state loses data: either the old
-    # table or the new one is always recoverable.
-    tmp = path + ".__staging__"
-    merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)  # stray dir from a prior crash
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return spark.read.parquet(path)

@@ -86,7 +86,10 @@ def incremental_update(
     )
     from blarify_spark.plans.linking import resolve_triples
 
-    changes = classify_pages(old_digests, new_pages)
+    # cut once: the changed-url set, the returned `changes` and both
+    # provenance tables read these blocks instead of each re-running
+    # classify's full-outer join of the digests with the new pages
+    changes = classify_pages(old_digests, new_pages).transform(cut_lazy)
     changed = changed_url_set(changes).transform(cut_lazy)
 
     # one Python crossing over the changed pages, never the corpus;

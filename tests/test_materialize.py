@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-import json
+import glob
 import os
 import shutil
 
@@ -10,14 +10,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from blarify_spark import corpus
-from blarify_spark.plans.diff import classify_pages, incremental_triples
-from blarify_spark.plans.extract import extract_text_stage, triples_stage
+from blarify_spark.plans.diff import classify_pages
 from blarify_spark.plans.materialize import (
+    materialize_stage,
     read_manifest,
+    run_incremental,
     run_pipeline,
     stage_committed,
 )
-from blarify_spark.ref import extract_text_bytes, extract_triples
 from blarify_spark.sources.pages import pages_from_rows
 
 
@@ -28,6 +28,74 @@ def _snap(df, cols):
 @pytest.fixture(scope="module")
 def out_dir(tmp_path_factory):
     return str(tmp_path_factory.mktemp("kg_out"))
+
+
+@pytest.fixture(scope="module")
+def both_entry_points(spark, fixture_pages, tmp_path_factory):
+    """(out dir, {run id: returned tables}) for a fresh run_pipeline of
+    the fixture pages and a run_incremental of its second snapshot."""
+    out = str(tmp_path_factory.mktemp("kg_both"))
+    snap2 = corpus.generate_incremental_snapshot(corpus.generate_pages(64))
+    full = run_pipeline(spark, fixture_pages, out, run_id="p")
+    inc = run_incremental(
+        spark, pages_from_rows(spark, snap2), out, run_id="u", prev_run_id="p"
+    )
+    return out, {"p": full, "u": inc}
+
+
+@pytest.mark.parametrize("run_id", ["p", "u"])
+def test_manifests_match_committed_tables(spark, both_entry_points, run_id):
+    """Every committed stage's manifest rows_out (summed from the parquet
+    footers) equals the table's count, including the lang-partitioned
+    extract stage and the salted edges stage; each returned DataFrame
+    carries the schema an inferring read of its table gets."""
+    out, tables = both_entry_points
+    stages = sorted(
+        os.path.basename(m)[: -len(".json")]
+        for m in glob.glob(os.path.join(out, "_manifest", run_id, "*.json"))
+    )
+    assert {"linked", "nodes", "edges", "mapping", "digests"} <= set(stages)
+    if run_id == "p":
+        assert "extract" in stages
+    for stage in stages:
+        m = read_manifest(out, run_id, stage)
+        committed = spark.read.parquet(os.path.join(out, run_id, stage))
+        assert m["rows_out"] == committed.count(), stage
+        assert sum(r["rows_out"] for r in m["lineage"]) == m["rows_out"]
+        if stage in tables[run_id]:
+            assert tables[run_id][stage].schema == committed.schema, stage
+    edges = read_manifest(out, run_id, "edges")
+    assert edges["n_partitions"] > 1  # salted writers, one row per file
+
+
+def test_incremental_changes_read_checkpointed_blocks(both_entry_points):
+    """run_incremental classifies the re-crawl once: the returned
+    `changes` plan is a scan of checkpointed blocks, so provenance and
+    the changed-url set cannot re-run classify's full-outer join."""
+    _, tables = both_entry_points
+    plan = tables["u"]["changes"]._jdf.queryExecution().toString()
+    assert "Join" not in plan
+    assert "ExistingRDD" in plan
+
+
+def test_fresh_stage_commit_runs_one_job(spark, tmp_path):
+    """A fresh commit is its write job only: the lineage comes from the
+    parquet footers and the read-back carries the written schema, so no
+    lineage aggregate and no schema-inference read runs."""
+    sc = spark.sparkContext
+    out = str(tmp_path / "kg")
+    sc.setJobGroup("stage_commit_job_budget", "stage commit job budget")
+    try:
+        got = materialize_stage(spark, out, "r1", "s", lambda: spark.range(10))
+    finally:
+        sc.setJobGroup("", "")
+    # job-start events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("stage_commit_job_budget")
+    assert len(jobs) == 1, jobs
+    assert read_manifest(out, "r1", "s")["rows_out"] == 10
+    assert got.schema == spark.read.parquet(os.path.join(out, "r1", "s")).schema
+    assert sorted(r["id"] for r in got.collect()) == list(range(10))
 
 
 def test_full_pipeline_materializes_with_manifests(spark, fixture_pages, out_dir):
@@ -184,28 +252,6 @@ def test_classify_warns_on_digest_family_mismatch(spark):
     assert got == {"u://a": "UNCHANGED"}
 
 
-def test_incremental_triples_match_full_recompute(spark, fixture_pages):
-    """Incremental merge == recompute-from-scratch on snapshot 2."""
-    rows = corpus.generate_pages(64)
-    snap2_rows = corpus.generate_incremental_snapshot(rows)
-    snap2 = pages_from_rows(spark, snap2_rows)
-
-    old_triples = triples_stage(extract_text_stage(fixture_pages))
-    inc = incremental_triples(fixture_pages, snap2, old_triples)
-
-    # golden: pure-Python extraction over snapshot 2
-    expected = sorted(
-        (r["url"], t["subj"], t["pred"], t["obj"])
-        for r in snap2_rows
-        for t in extract_triples(extract_text_bytes(r["html"]), r["lang"])
-    )
-    got = sorted(
-        (r["url"], r["subj"], r["pred"], r["obj"])
-        for r in inc.select("url", "subj", "pred", "obj").collect()
-    )
-    assert got == expected
-
-
 def test_edges_partitioning_spreads_head_entity(spark, fixture_pages, out_dir):
     """Salted write: the dominant head entity must span >1 output partition."""
     edges = spark.read.parquet(os.path.join(out_dir, "r1", "edges"))
@@ -215,45 +261,6 @@ def test_edges_partitioning_spreads_head_entity(spark, fixture_pages, out_dir):
     )
     assert hooli.count() >= 8
     assert nfiles > 1  # head entity spread across multiple writer outputs
-
-
-def test_upsert_parquet_merge_semantics(spark, tmp_path):
-    from blarify_spark.plans.materialize import upsert_parquet
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [("a", 1), ("b", 2), ("c", 3)], ["k", "v"]
-    )
-    upsert_parquet(spark, base, path, ["k"])
-    # update b, insert d
-    delta = spark.createDataFrame([("b", 20), ("d", 4)], ["k", "v"])
-    out = upsert_parquet(spark, delta, path, ["k"])
-    got = dict((r["k"], r["v"]) for r in out.collect())
-    assert got == {"a": 1, "b": 20, "c": 3, "d": 4}
-    # idempotent re-application
-    out2 = upsert_parquet(spark, delta, path, ["k"])
-    assert dict((r["k"], r["v"]) for r in out2.collect()) == got
-
-
-def test_upsert_parquet_recovers_from_mid_swap_crash(spark, tmp_path):
-    """Crash window between rename(path, old) and rename(tmp, path): the
-    live path is absent and `.__old__` holds the only copy. The next
-    upsert must restore it, not rmtree it (ADVICE r02: silent loss of
-    all prior rows on recovery)."""
-    import os
-
-    from blarify_spark.plans.materialize import upsert_parquet
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame([("a", 1), ("b", 2)], ["k", "v"])
-    upsert_parquet(spark, base, path, ["k"])
-    # simulate the crash: table renamed aside, staging never landed
-    os.rename(path, path + ".__old__")
-    delta = spark.createDataFrame([("b", 20), ("c", 3)], ["k", "v"])
-    out = upsert_parquet(spark, delta, path, ["k"])
-    got = dict((r["k"], r["v"]) for r in out.collect())
-    assert got == {"a": 1, "b": 20, "c": 3}  # 'a' survived the recovery
-    assert not os.path.exists(path + ".__old__")
 
 
 def test_classify_pages_moved_reverse_collision(spark):
