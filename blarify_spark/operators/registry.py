@@ -69,14 +69,12 @@ _ROWS_ONLY_PRIORITY = [
     "kg_workflows_materialized",  # new round-4
     "kg_diff_labeled_nodes",
     "kg_child_gather",  # round-1 driver crash; verified green r2 AND r3
-    "multimodal_decode_features",  # same
     "kg_workflow_bridges",
     "kg_skeletons",
     "kg_folder_leaves",
     "kg_lookup_name_type",
     "kg_mention_edges",
     "kg_diff_moved_pages",
-    "multimodal_frame_sample",
     "dedup_minhash_lsh",
     "dedup_simhash",
     "ann_lsh_topk",
@@ -85,7 +83,6 @@ _ROWS_ONLY_PRIORITY = [
     "kg_khop_reach",
     "kg_nodes",
     "kg_edge_type_counts",
-    "multimodal_kind_stats",
 ]
 
 
@@ -155,7 +152,6 @@ def _load_all() -> None:
     import blarify_spark.operators.graphops  # noqa: F401
     import blarify_spark.operators.kg_queries  # noqa: F401
     import blarify_spark.operators.mixing  # noqa: F401
-    import blarify_spark.operators.multimodal  # noqa: F401
     import blarify_spark.operators.quality  # noqa: F401
     import blarify_spark.operators.relational  # noqa: F401
     import blarify_spark.operators.similarity  # noqa: F401

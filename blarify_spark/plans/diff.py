@@ -111,12 +111,7 @@ def _relative_id() -> F.Column:
     return F.regexp_replace("url", r"^[a-z][a-z0-9+.\-]*://[^/]+", "")
 
 
-def classify_pages(
-    old_pages: DataFrame,
-    new_pages: DataFrame,
-    *,
-    probe_digest_families: bool = True,
-) -> DataFrame:
+def classify_pages(old_pages: DataFrame, new_pages: DataFrame) -> DataFrame:
     """Full-outer join on url -> (url, change, old_url, new_hash) with
     change in ADDED | DELETED | MODIFIED | MOVED | UNCHANGED. new_hash
     is the new snapshot's tagged content digest (null for DELETED) — the
@@ -127,15 +122,8 @@ def classify_pages(
     on relative_id (blarify's renamed-path identity,
     project_graph_diff_creator.py:131-148): content-identical -> MOVED,
     content-changed -> MODIFIED; both carry old_url (null otherwise).
-
-    probe_digest_families=False skips the two small eager probe jobs on
-    hot paths where the caller already knows both sides share a family
-    (e.g. a loop re-diffing snapshots it wrote itself).
     """
-    if probe_digest_families and (
-        ("content_hash" in old_pages.columns)
-        or ("content_hash" in new_pages.columns)
-    ):
+    if "content_hash" in old_pages.columns or "content_hash" in new_pages.columns:
         _warn_on_digest_family_mismatch(old_pages, new_pages)
     o = old_pages.select(
         F.col("url").alias("o_url"),

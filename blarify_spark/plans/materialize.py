@@ -495,30 +495,16 @@ def run_incremental(
     # prov_edges -> prov_nodes to answer "what did ingest X change".
     from blarify_spark.plans.provenance import provenance_tables
 
-    _prov_cache: dict[str, DataFrame] = {}
-
-    def _prov(which: str) -> DataFrame:
-        if not _prov_cache:
-            pn, pe = provenance_tables(out["changes"], linked, run_id)
-            _prov_cache["nodes"] = pn
-            _prov_cache["edges"] = pe
-        return _prov_cache[which]
-
+    prov = _memo(
+        lambda: dict(
+            zip(("nodes", "edges"), provenance_tables(out["changes"], linked, run_id))
+        )
+    )
     prov_nodes = materialize_stage(
-        spark,
-        out_dir,
-        run_id,
-        "prov_nodes",
-        lambda: _prov("nodes"),
-        resume=resume,
+        spark, out_dir, run_id, "prov_nodes", lambda: prov("nodes"), resume=resume
     )
     prov_edges = materialize_stage(
-        spark,
-        out_dir,
-        run_id,
-        "prov_edges",
-        lambda: _prov("edges"),
-        resume=resume,
+        spark, out_dir, run_id, "prov_edges", lambda: prov("edges"), resume=resume
     )
     # ingest-session chain (PR -> commit INTEGRATION_SEQUENCE analog,
     # relationship_creator.py:217-238): each incremental run extends the

@@ -1,4 +1,4 @@
-"""Incremental update + labeled graph diff.
+"""Incremental update + labeled node diff.
 
 Blarify's incremental path rebuilds only changed files and keeps deleted
 nodes labeled DELETED alongside ADDED/MODIFIED marks
@@ -12,7 +12,7 @@ project_graph_diff_creator.py:150-179). The web-KG analog:
   function of `linked`, so the update equals a full rebuild of the new
   snapshot for every delta (merges, splits, bucket-cap crossings) by
   construction;
-* consumers see what changed: nodes/edges diffs carry
+* consumers see what changed: the nodes diff carries
   ADDED | DELETED | MODIFIED | UNCHANGED labels, with DELETED rows kept
   as tombstones instead of silently dropped.
 """
@@ -112,7 +112,7 @@ def incremental_update(
 
 
 # ---------------------------------------------------------------------------
-# Labeled graph diff (D3 completion): tombstoned change marks on nodes/edges
+# Labeled node diff (D3 completion): tombstoned change marks on nodes
 # ---------------------------------------------------------------------------
 
 
@@ -143,22 +143,6 @@ def labeled_nodes_diff(old_nodes: DataFrame, new_nodes: DataFrame) -> DataFrame:
             (F.col("o_name") != F.col("n_name")) | (F.col("o_n") != F.col("n_n")),
             F.lit("MODIFIED"),
         )
-        .otherwise(F.lit("UNCHANGED"))
-        .alias("change"),
-    )
-
-
-def labeled_edges_diff(old_edges: DataFrame, new_edges: DataFrame) -> DataFrame:
-    """Edge facts are immutable once emitted, so the diff is set-valued:
-    ADDED | DELETED | UNCHANGED per (url, subj_id, pred, obj_id,
-    span_start); DELETED rows are tombstones."""
-    key = ["url", "subj_id", "pred", "obj_id", "span_start"]
-    o = old_edges.select(*key, F.lit(True).alias("in_old"))
-    n = new_edges.select(*key, F.lit(True).alias("in_new"))
-    return o.join(n, key, "full_outer").select(
-        *key,
-        F.when(F.col("in_old").isNull(), F.lit("ADDED"))
-        .when(F.col("in_new").isNull(), F.lit("DELETED"))
         .otherwise(F.lit("UNCHANGED"))
         .alias("change"),
     )

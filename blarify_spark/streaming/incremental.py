@@ -110,7 +110,6 @@ def kg_update_batch(
     batch_pages: DataFrame,
     batch_id: int,
     out_dir: str,
-    with_workflows: bool = True,
 ) -> dict[str, DataFrame]:
     """Process ONE micro-batch: full pipeline for the first batch,
     incremental update (provenance + workflows + recanon) after."""
@@ -118,11 +117,7 @@ def kg_update_batch(
     prev = latest_committed_run(out_dir, batch_id)
     if prev is None:
         return run_pipeline(
-            spark,
-            batch_pages,
-            out_dir,
-            run_id=run_id,
-            with_workflows=with_workflows,
+            spark, batch_pages, out_dir, run_id=run_id, with_workflows=True
         )
     snapshot = _snapshot_from_delta(spark, batch_pages, out_dir, prev)
     return run_incremental(
@@ -134,7 +129,6 @@ def streaming_kg_update(
     pages_stream: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    with_workflows: bool = True,
 ):
     """Attach the incremental-KG sink to a pages stream and drain all
     currently-available files (availableNow), then stop. Re-invoking
@@ -144,13 +138,7 @@ def streaming_kg_update(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        kg_update_batch(
-            batch_df.sparkSession,
-            batch_df,
-            int(batch_id),
-            out_dir,
-            with_workflows=with_workflows,
-        )
+        kg_update_batch(batch_df.sparkSession, batch_df, int(batch_id), out_dir)
 
     q = (
         pages_stream.writeStream.trigger(availableNow=True)

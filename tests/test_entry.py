@@ -25,6 +25,22 @@ def test_registry_shapes():
         assert callable(fn), name
 
 
+def test_registry_ordering_names_are_registered():
+    """Every name the driver ordering lists is a registered query of the
+    right kind, so a deleted query cannot leave a name the ordering
+    silently ignores."""
+    from blarify_spark.operators import registry
+
+    registry._load_all()
+    reg = registry._REGISTRY
+    for name in registry._ROWS_ONLY_PRIORITY:
+        assert name in reg, name
+        assert reg[name].oracle is None, name
+    for name in registry._ORACLED_TAIL:
+        assert name in reg, name
+        assert reg[name].oracle, name
+
+
 def test_scan_filter_pushdown_reaches_parquet(spark):
     """The judge-facing plan check: predicates must appear as
     PushedFilters in the parquet scan, and projection must prune columns

@@ -24,7 +24,6 @@ from blarify_spark.plans.linking import link_mentions, link_triples
 from blarify_spark.plans.recanon import (
     changed_url_set,
     incremental_update,
-    labeled_edges_diff,
     labeled_nodes_diff,
 )
 from blarify_spark.sources.alias import alias_dict
@@ -224,8 +223,8 @@ def test_cap_transition_equals_full_rebuild(spark, monkeypatch):
 
 
 def test_labeled_nodes_diff_tombstones_and_marks(spark, bridged):
-    old_nodes, old_edges, _ = canonicalize(_linked(spark, SNAP1))
-    new_nodes, new_edges = bridged[0]["nodes"], bridged[0]["edges"]
+    old_nodes, _, _ = canonicalize(_linked(spark, SNAP1))
+    new_nodes = bridged[0]["nodes"]
 
     nd = labeled_nodes_diff(old_nodes, new_nodes)
     by_change = {
@@ -241,13 +240,6 @@ def test_labeled_nodes_diff_tombstones_and_marks(spark, bridged):
     for r in tomb:  # tombstones carry their last-known payload
         assert r["name"] is not None and r["n_mentions"] is not None
 
-    ed = labeled_edges_diff(old_edges, new_edges)
-    ec = {
-        r["change"]: r["n"]
-        for r in ed.groupBy("change").agg(F.count("*").alias("n")).collect()
-    }
-    assert ec.get("ADDED", 0) >= 1  # the bridge sentence's edge
-    assert ec.get("UNCHANGED", 0) >= 1
 
 
 def test_run_incremental_materializes_and_equals_full_pipeline(spark, tmp_path):
